@@ -31,7 +31,7 @@ class AccessDenied(Exception):
     """A governed read without a covering grant (catalog ACL)."""
 
 
-# Inferred parquet schema per (path, dir mtime) — the Glue-catalog
+# Inferred parquet schema per (path, size, mtime) — the Glue-catalog
 # analog of a table's registered schema. Without it every
 # ``spark.read.parquet`` fires a one-task footer-inference JOB, and a
 # query joining six tables pays six driver round-trips before any real
@@ -39,16 +39,28 @@ class AccessDenied(Exception):
 # scale the same jobs list object-store prefixes, which is why Glue
 # keeps schemas in the catalog instead of re-crawling per query —
 # optimization guide §6 "file listing" / §7.3 driver-side work). The
-# mtime in the key invalidates the entry when a table is rewritten
+# stamp in the key invalidates the entry when a table is rewritten
 # (parquet dir mtime changes with its content).
-_SCHEMA_CACHE: dict[tuple[str, float], object] = {}
+_SCHEMA_CACHE: dict[tuple[str, tuple[int, int]], object] = {}
+
+
+def file_stamp(path: str) -> tuple[int, int] | None:
+    """(size, mtime_ns) of a local file or directory, None when it
+    cannot be stat'ed. A rewrite changes the stamp, which is what the
+    schema cache here and the scratch registry
+    (``operators._helpers``) key their validity on."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return st.st_size, st.st_mtime_ns
 
 
 def _read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
-    try:
-        key = (path, os.path.getmtime(path))
-    except OSError:
+    stamp = file_stamp(path)
+    if stamp is None:
         return spark.read.parquet(path)  # missing path: surface Spark's error
+    key = (path, stamp)
     sch = _SCHEMA_CACHE.get(key)
     if sch is None:
         df = spark.read.parquet(path)
@@ -135,10 +147,6 @@ def load_tables(
     byte gate keeps the repartition OUT of any plan where the scan
     splits properly (a production table above ~16 splits), so at real
     scale the plan is unchanged."""
-    par = spark.sparkContext.defaultParallelism
-    max_split = _size_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-    )
     out: dict[str, DataFrame] = {}
     for t in names:
         path = os.path.join(sf_dir, f"{t}.parquet")
@@ -147,21 +155,10 @@ def load_tables(
             if t == "events"
             else _read_parquet_cached(spark, path)
         )
-        if t in fan_out:
-            try:
-                est_splits = max(1, os.path.getsize(path) // max_split)
-            except OSError:
-                est_splits = par  # multi-file dir or remote: assume splittable
-            if est_splits < par // 2:
-                df = df.repartition(par)
+        if t in fan_out and scan_is_serial(spark, sf_dir, t):
+            df = df.repartition(spark.sparkContext.defaultParallelism)
         out[t] = df
     return out
-
-
-def register_views(spark: SparkSession, sf_dir: str, prefix: str = "") -> None:
-    """Register every table as a temp view (Athena-over-Glue analog)."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(f"{prefix}{name}")
 
 
 class Lake:

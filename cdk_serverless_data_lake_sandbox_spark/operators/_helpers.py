@@ -24,41 +24,10 @@ def money(expr: Column, ndigits: int = 2) -> Column:
 
 
 def money_sum(col: Column | str, scale: int = 2, ndigits: int = 2) -> Column:
-    """Deterministic sum of ONE money column, rounded to ``ndigits``
-    and surfaced as a double.
-
-    Default path: exact DECIMAL sum (order-independent, oracle-safe).
-    With ``SPARK_GRAFT_LONG_CENTS=1``: the column is scaled to 64-bit
-    integer "cents" (exact, since it is first cast to
-    decimal(18,scale)) and summed as a LONG — Tungsten's cheapest
-    aggregation path, measured ~2x the decimal sum (SURVEY §7 item 1).
-    The two paths are bit-identical when they both complete: the long
-    sum divided by 10^scale is the exact rational the decimal sum
-    holds, and IEEE division / decimal->double cast both round that
-    exact value to nearest-even once (parity-tested).
-
-    The fast path is only safe for SIMPLE sums where the long cannot
-    overflow: |sum| < 2^63 / 10^scale money units (9.2e14 at scale 2).
-    Chained arithmetic like q1's price*(1-disc)*(1+tax) needs more
-    fractional digits than a long can carry — those stay decimal
-    unconditionally (which is why this helper takes a column, not an
-    expression)."""
-    c = F.col(col) if isinstance(col, str) else col
-    if _os.environ.get("SPARK_GRAFT_LONG_CENTS") == "1":
-        unit = 10 ** scale
-        cents = (c.cast(f"decimal(18,{scale})") * unit).cast("long")
-        return F.round(F.sum(cents) / float(unit), ndigits).cast("double")
-    return money(F.sum(dec(c, scale)), ndigits)
-
-
-def dmean(sum_col: Column, count_col: Column, name: str) -> Column:
-    """Deterministic mean: exact decimal sum -> double, IEEE divide."""
-    return (sum_col.cast("double") / count_col).alias(name)
-
-
-# SQL-side equivalents for oracle strings (DuckDB dialect == ANSI here).
-def sql_dec(expr: str, scale: int = 4) -> str:
-    return f"CAST({expr} AS DECIMAL(18,{scale}))"
+    """Deterministic sum of ONE money column: an exact DECIMAL sum
+    (order-independent, oracle-safe), rounded to ``ndigits`` and
+    surfaced as a double."""
+    return money(F.sum(dec(col, scale)), ndigits)
 
 
 def round_rat(num_sql: str, den_sql: str, dp: int, wide: bool = False) -> Column:
@@ -114,14 +83,89 @@ def sql_round_rat(num_sql: str, den_sql: str, dp: int, wide: bool = False) -> st
 import atexit as _atexit
 import os as _os
 import shutil as _shutil
+import threading as _threading
 import uuid as _uuid
+from dataclasses import dataclass as _dataclass
+from urllib.parse import unquote as _unquote
+from urllib.parse import urlsplit as _urlsplit
+
+from cdk_serverless_data_lake_sandbox_spark.catalog import file_stamp as _file_stamp
 
 _SCRATCH_ROOT = _os.environ.get(
     "SPARK_GRAFT_SCRATCH",
     _os.path.join(_os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))), ".scratch"),
 )
-_MATERIALIZED: dict[tuple[str, str], str] = {}
-_CLEANUP_REGISTERED: set[str] = set()
+
+
+@_dataclass
+class _Entry:
+    """One scratch registry entry: a written intermediate (or, for
+    :func:`memo`, a driver-side value) plus what its build read."""
+
+    path: str | None  # scratch parquet dir; None for a memo value
+    schema: object = None
+    # {(uri, size, mtime_ns)} the build read, scratch seen through
+    inputs: frozenset = frozenset()
+    reads: frozenset = frozenset()  # scratch dirs the build scanned directly
+    pinned: bool = False  # written by a reliable-mode pin()
+    nparts: int | None = None  # probed split count of the scratch scan
+    value: object = None  # memo value
+
+
+# The scratch registry, keyed (applicationId, key). Keyed entries are
+# served across calls; anonymous writes (keyless materialize, reliable
+# pins) are recorded under their own path so later builds can see
+# through them to the source files and pins can be reclaimed by
+# lineage. Every application with an entry has its scratch tree
+# removed at exit.
+_MATERIALIZED: dict[tuple[str, str], _Entry] = {}
+# Per thread: inputs of the frames pin()ned while materialize_lazy
+# builders run, innermost builder last (a local checkpoint hides them
+# from inputFiles()).
+_BUILDING = _threading.local()
+
+
+@_atexit.register
+def _drop_scratch() -> None:
+    for app in {a for a, _ in _MATERIALIZED}:
+        _shutil.rmtree(_os.path.join(_SCRATCH_ROOT, app), ignore_errors=True)
+
+
+def _stamp(uri: str) -> tuple:
+    """(uri, size, mtime_ns) of one scanned file; a non-``file:`` URI
+    is recorded by URI only."""
+    parts = _urlsplit(uri)
+    st = _file_stamp(_unquote(parts.path)) if parts.scheme == "file" else None
+    return (uri, *(st or (None, None)))
+
+
+def _fingerprint(app: str, files) -> tuple[frozenset, frozenset]:
+    """(inputs, scratch dirs read) of a frame scanning ``files``. A
+    file under a recorded scratch dir stands for that entry's own
+    inputs; a keyed scratch file is recorded too (a rebuild renames
+    its parts, so entries built on top of it go stale), an anonymous
+    one is not (pins are reclaimed once superseded)."""
+    app_dir = _os.path.abspath(_os.path.join(_urlsplit(_SCRATCH_ROOT).path, app))
+    by_name = None
+    inputs, reads = set(), set()
+    for uri in files:
+        d = _os.path.dirname(_unquote(_urlsplit(uri).path))
+        if _os.path.dirname(d) == app_dir:
+            if by_name is None:
+                by_name = {
+                    _os.path.basename(e.path): (k, e)
+                    for (a, k), e in list(_MATERIALIZED.items())
+                    if a == app and e.path
+                }
+            key, e = by_name.get(_os.path.basename(d), (None, None))
+            if e is not None:
+                inputs |= e.inputs
+                reads.add(e.path)
+                if key == e.path:  # anonymous: recorded under its own path
+                    continue
+        inputs.add(_stamp(uri))
+    return frozenset(inputs), frozenset(reads)
+
 
 # Stale-tree age bound for vacuum_scratch (seconds). Scratch trees are
 # removed by atexit, so anything left behind belongs to a SIGKILLed
@@ -165,6 +209,11 @@ def materialize(df, key: str | None = None, fan_out: bool = True):
     ``key`` enables reuse across queries in one application (e.g. the
     hashed-shingle frame for a given sf_dir, shared by the jaccard /
     removal / components queries); keyless calls always write fresh.
+    A keyed hit is served only while ``df`` reads the same files the
+    build read, each with the size and mtime it had then; otherwise
+    the entry is rebuilt in place (see :func:`_fingerprint` for how
+    scratch inputs are seen through). Inputs that are not ``file:``
+    URIs are recorded by URI only, so a rewrite of them is not seen.
     The read applies the writer's schema explicitly so an empty frame
     round-trips. ``fan_out=False`` skips the small-file re-parallelize
     on the read side (r12): for a tiny dimension-sized intermediate
@@ -176,30 +225,22 @@ def materialize(df, key: str | None = None, fan_out: bool = True):
 
 def _materialize_with_path(df, key: str | None = None, fan_out: bool = True):
     """Body of :func:`materialize`, additionally returning the
-    written scratch path (pin() uses it to reclaim superseded
-    iteration state)."""
+    written scratch path. Every write is recorded in the registry:
+    keyed ones under ``key``, anonymous ones under their path."""
     spark = df.sparkSession
     app = spark.sparkContext.applicationId
-    if key is not None and (app, key) in _MATERIALIZED:
-        path = _MATERIALIZED[(app, key)]
-        return _scratch_read(spark, df.schema, path, fan_out), path
-    app_dir = _os.path.join(_SCRATCH_ROOT, app)
-    if app not in _CLEANUP_REGISTERED:
-        _CLEANUP_REGISTERED.add(app)
-        _atexit.register(_shutil.rmtree, app_dir, ignore_errors=True)
+    inputs, reads = _fingerprint(app, df.inputFiles())
+    entry = _MATERIALIZED.get((app, key)) if key is not None else None
+    if entry is not None and entry.inputs == inputs:
+        return _scratch_read(spark, entry, fan_out), entry.path
     safe = (key or uuid_hex()).replace("/", "_").replace(":", "_")
-    path = _os.path.join(app_dir, safe)
+    path = _os.path.join(_SCRATCH_ROOT, app, safe)
     # Snappy, not the session's zstd: scratch intermediates are
     # write-once read-few and deleted at exit — cheap encode beats
     # compression ratio here.
     df.write.mode("overwrite").option("compression", "snappy").parquet(path)
-    if key is not None:
-        _MATERIALIZED[(app, key)] = path
-        _SCRATCH_SCHEMA[(app, key)] = df.schema
-    return _scratch_read(spark, df.schema, path, fan_out), path
-
-
-_SCRATCH_SCHEMA: dict[tuple[str, str], object] = {}
+    entry = _MATERIALIZED[(app, key or path)] = _Entry(path, df.schema, inputs, reads)
+    return _scratch_read(spark, entry, fan_out), path
 
 
 def materialize_lazy(spark, key: str, builder, fan_out: bool = True):
@@ -208,37 +249,59 @@ def materialize_lazy(spark, key: str, builder, fan_out: bool = True):
     write — the caller has already paid for constructing ``df``, which
     for eager-plan builders (kmeans_assign collects centroids per
     Lloyd round) is the expensive part. Here the builder runs only on
-    a miss; hits re-scan the scratch parquet directly."""
+    a miss; a hit re-scans the scratch parquet directly, and is served
+    only while every file the build read still has the size and mtime
+    it had then. The build's inputs are those of the frame it returns
+    plus those of every frame :func:`pin` checkpointed while it ran.
+    Inputs hidden behind a local checkpoint taken OUTSIDE a builder
+    are not seen."""
     app = spark.sparkContext.applicationId
-    if (app, key) in _MATERIALIZED:
-        return _scratch_read(
-            spark, _SCRATCH_SCHEMA[(app, key)], _MATERIALIZED[(app, key)], fan_out
-        )
-    return materialize(builder(), key=key, fan_out=fan_out)
+    entry = _MATERIALIZED.get((app, key))
+    if entry is not None and all(_stamp(f[0]) == f for f in entry.inputs):
+        return _scratch_read(spark, entry, fan_out)
+    building = _BUILDING.__dict__.setdefault("stack", [])
+    building.append(set())
+    try:
+        df = builder()
+    finally:
+        pinned = building.pop()
+    out = materialize(df, key=key, fan_out=fan_out)
+    entry = _MATERIALIZED[(app, key)]
+    entry.inputs |= pinned
+    return out
 
 
-_SCRATCH_NPART: dict[str, int] = {}
+def memo(spark, key: str, frame, fn):
+    """Driver-side value ``fn(frame)`` (a count, a small resolved
+    frame) computed once per application and ``key``, and recomputed
+    whenever ``frame`` reads other files, or the same files changed."""
+    app = spark.sparkContext.applicationId
+    inputs = _fingerprint(app, frame.inputFiles())[0]
+    entry = _MATERIALIZED.get((app, key))
+    if entry is None or entry.inputs != inputs:
+        entry = _MATERIALIZED[(app, key)] = _Entry(None, inputs=inputs, value=fn(frame))
+    return entry.value
 
 
-def _scratch_read(spark, schema, path, fan_out: bool = True):
+def _scratch_read(spark, entry: _Entry, fan_out: bool = True):
     """Scan a scratch intermediate, restoring parallelism when the
     files are tiny: Spark bin-packs small files into one split, which
     would serialize every downstream stage that consumes the
     materialized frame. At real scale the files exceed
     maxPartitionBytes and the gate never fires.
 
-    The scan's split count is probed once per path (scratch files are
+    The scan's split count is probed once per entry (scratch files are
     immutable after the write) — ``df.rdd.getNumPartitions()``
     materializes a physical plan, so paying it on every re-read of a
     shared intermediate was measurable driver overhead (round-2
     verdict nit)."""
-    out = spark.read.schema(schema).parquet(path)
+    out = spark.read.schema(entry.schema).parquet(entry.path)
     if not fan_out:
         return out
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if path not in _SCRATCH_NPART:
-        _SCRATCH_NPART[path] = out.rdd.getNumPartitions()
-    if _SCRATCH_NPART[path] < max(n // 2, 2):
+    if entry.nparts is None:
+        entry.nparts = out.rdd.getNumPartitions()
+    if entry.nparts < max(n // 2, 2):
         out = out.repartition(n)
     return out
 
@@ -255,7 +318,7 @@ def pin(df):
     100 TB design).
 
     Mode comes from the session conf ``spark.graft.materializer``
-    (fallback: env ``SPARK_GRAFT_MATERIALIZER``, default ``auto``):
+    (default ``auto``):
 
     - ``local``    — ``df.localCheckpoint()``: fastest, blocks live on
       executors, NOT executor-loss-safe.
@@ -270,86 +333,47 @@ def pin(df):
 
     Results are bit-identical across modes (parity-tested): both paths
     replay the same physical rows; only where the bytes live differs.
-    Use as ``df.transform(pin)`` or ``pin(df)``.
+    Use as ``df.transform(pin)`` or ``pin(df)``. Inside a
+    :func:`materialize_lazy` builder, the pinned frame's input files
+    are added to the keyed build's recorded inputs in either mode.
 
     **Reliable-mode scratch lifetime contract:** scratch is reclaimed
-    per (application, call-site), keeping the newest ``_PIN_KEEP``
-    generations — which assumes ONE live pinned lineage per site. Two
-    lazily-held results whose loops pin from the same source line
-    (e.g. ``pagerank()`` invoked twice, both results kept unevaluated
-    and unioned later) would let the second invocation reclaim scratch
-    the first result still references (r8 advice). Callers composing
-    multiple live pinned frames set ``spark.graft.pin_reclaim=off``
-    (or env ``SPARK_GRAFT_PIN_RECLAIM=off``) around the second build —
-    scratch then accumulates one frame per iteration and is swept with
-    the application's scratch dir instead."""
+    by recorded lineage. When pin P is written, each pin Q that P
+    scans directly is its parent; the pins a parent scanned are
+    deleted, unless P scans them directly too or their schema differs
+    from P's. An iterative loop therefore keeps two generations on
+    disk; pins of other lineages are never touched, and neither is a
+    differently-shaped base pin (a node table read before the loop
+    and joined again after it). A caller must not read loop state
+    from two or more generations back."""
     spark = df.sparkSession
-    try:
-        conf_value = spark.conf.get("spark.graft.materializer", None)
-    except Exception:
-        conf_value = None
+    app = spark.sparkContext.applicationId
     mode = _materializer_mode(
-        spark.sparkContext.master,
-        conf_value,
-        _os.environ.get("SPARK_GRAFT_MATERIALIZER"),
+        spark.sparkContext.master, spark.conf.get("spark.graft.materializer", None)
     )
     if mode == "local":
+        building = _BUILDING.__dict__.get("stack")
+        if building:
+            building[-1].update(_fingerprint(app, df.inputFiles())[0])
         return df.localCheckpoint()
     out, path = _materialize_with_path(df)
-    _reclaim_pin_scratch(spark, path)
+    new = _MATERIALIZED[(app, path)]
+    new.pinned = True
+    parents = [_MATERIALIZED.get((app, p)) for p in new.reads]
+    for grand in {g for q in parents if q and q.pinned for g in q.reads} - new.reads:
+        g = _MATERIALIZED.get((app, grand))
+        # simpleString: the same columns and types, nullability aside
+        if g and g.pinned and g.schema.simpleString() == new.schema.simpleString():
+            _shutil.rmtree(grand, ignore_errors=True)
+            del _MATERIALIZED[(app, grand)]
     return out
 
 
-# Per (application, call-site) history of reliable-pin scratch paths.
-# An iterative loop pins from the same source line every round; once a
-# NEWER pin from that line has been fully written, state from two pins
-# ago is dead — no live plan can reference it (the round that read it
-# has already materialized its successor). Keeping one superseded
-# generation as a safety margin, everything older is deleted, which
-# bounds reliable-mode disk at ~2 frames per call site instead of
-# growing by one frame per iteration (round-7 review finding).
-_PIN_HISTORY: dict[tuple[str, str], list[str]] = {}
-_PIN_KEEP = 2
-
-
-def _reclaim_pin_scratch(spark, path: str) -> None:
-    try:
-        conf_value = spark.conf.get("spark.graft.pin_reclaim", None)
-    except Exception:
-        conf_value = None
-    if (conf_value or _os.environ.get("SPARK_GRAFT_PIN_RECLAIM", "on")) == "off":
-        return
-    app = spark.sparkContext.applicationId
-    site = _caller_site()
-    hist = _PIN_HISTORY.setdefault((app, site), [])
-    hist.append(path)
-    while len(hist) > _PIN_KEEP:
-        dead = hist.pop(0)
-        _SCRATCH_NPART.pop(dead, None)
-        _shutil.rmtree(dead, ignore_errors=True)
-
-
-def _caller_site() -> str:
-    """file:line of the nearest stack frame OUTSIDE this module and
-    pyspark (i.e. the operator code that called pin(), possibly via
-    DataFrame.transform)."""
-    import sys as _sys
-
-    f = _sys._getframe(1)
-    here = _os.path.abspath(__file__)
-    while f is not None:
-        fn = f.f_code.co_filename
-        if _os.path.abspath(fn) != here and (_os.sep + "pyspark" + _os.sep) not in fn:
-            return f"{fn}:{f.f_lineno}"
-        f = f.f_back
-    return "<unknown>"
-
-
-def _materializer_mode(master: str, conf_value, env_value) -> str:
+def _materializer_mode(master: str, conf_value) -> str:
     """Resolve the effective materializer mode (pure, so the
     non-local-master-defaults-to-reliable contract is unit-testable
     without spinning a cluster)."""
-    mode = conf_value or env_value or "auto"
+    mode = conf_value or "auto"
     if mode == "auto":
         # local-cluster[...] is NOT local: its executors are separate
         # JVMs that can die independently, so auto must treat it like

@@ -18,6 +18,7 @@ from pyspark.sql.window import Window
 from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     materialize,
+    memo,
     round_rat,
     sql_round_rat,
 )
@@ -184,10 +185,6 @@ def _hashed_shingles(docs: DataFrame, scratch_key: str | None) -> DataFrame:
 _HOT_AUTO_BOUND = 1024
 
 
-_HOT_MISS = object()
-_HOT_CACHE: dict[tuple, DataFrame | None] = {}
-
-
 def _resolve_hot(
     inv: DataFrame, hot_threshold, scratch_key: str | None = None
 ) -> DataFrame | None:
@@ -205,33 +202,29 @@ def _resolve_hot(
     materialized to scratch: three plan branches consume it (anti,
     semi, and the emptiness probe) and the count agg should run once.
 
-    The resolved decision is CACHED per (app, scratch_key, bound) —
-    posting sizes are a property of the materialized shingle scratch,
-    so every query deriving from the same corpus intermediate (jaccard
-    / containment / removal / components / source-matrix over one
-    sf_dir) pays the probe aggregation exactly once, the same
-    pay-once discipline as the scratch itself."""
+    The resolved decision is memoized per (app, scratch_key, threshold)
+    for as long as ``inv`` reads the same shingle scratch — posting
+    sizes are a property of that scratch, so every query deriving
+    from the same corpus intermediate (jaccard / containment /
+    removal / components / source-matrix over one sf_dir) pays the
+    probe aggregation exactly once, the same pay-once discipline as
+    the scratch itself."""
     if hot_threshold is None:
         return None
     bound = _HOT_AUTO_BOUND if hot_threshold == "auto" else int(hot_threshold)
-    ck = None
-    if scratch_key is not None:
-        app = inv.sparkSession.sparkContext.applicationId
-        ck = (app, scratch_key, bound)
-        cached = _HOT_CACHE.get(ck, _HOT_MISS)
-        if cached is not _HOT_MISS:
-            return cached
-    hot = materialize(
-        inv.groupBy("shingle")
-        .agg(F.count("*").alias("psz"))
-        .where(F.col("psz") > bound)
-        .select("shingle")
-    )
-    if hot_threshold == "auto" and hot.isEmpty():
-        hot = None
-    if ck is not None:
-        _HOT_CACHE[ck] = hot
-    return hot
+
+    def resolve(inv: DataFrame) -> DataFrame | None:
+        hot = materialize(
+            inv.groupBy("shingle")
+            .agg(F.count("*").alias("psz"))
+            .where(F.col("psz") > bound)
+            .select("shingle")
+        )
+        return None if hot_threshold == "auto" and hot.isEmpty() else hot
+
+    if scratch_key is None:
+        return resolve(inv)
+    return memo(inv.sparkSession, f"{scratch_key}:hot:{hot_threshold}", inv, resolve)
 
 
 def _raw_postings(

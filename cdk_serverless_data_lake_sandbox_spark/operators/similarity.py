@@ -149,8 +149,7 @@ def near_dup_embedding_frame(
         assign = materialize(
             kmeans_assign(hot.select("vec_id", "embedding"), k, 2)
             .select("vec_id", "cluster")
-            .join(hot.select("vec_id", "label"), "vec_id"),
-            key=f"neardup-hot-assign:{id(e)}",
+            .join(hot.select("vec_id", "label"), "vec_id")
         ).join(e.select("vec_id", "embedding"), "vec_id")
         approx = _pairwise_block_join(
             side(assign, "a", ["label", "cluster"]),

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     materialize,
+    memo,
     pin,
     round_rat,
     sql_round_rat,
@@ -2270,9 +2271,6 @@ FROM (
 """
 
 
-_N_VECS_CACHE: dict[tuple[str, str], int] = {}
-
-
 @register("hybrid_retrieval_rrf", oracle=_HYBRID_ORACLE)
 def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval via reciprocal-rank fusion (Cormack et al.
@@ -2311,14 +2309,9 @@ def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir, ("documents",))["documents"]
     e = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     # one bounded scalar per (application, table): the doc->vec link
-    # modulus. Cached like the schema cache — the count job re-ran per
-    # invocation (r12); the table is immutable for the app's lifetime.
-    app = spark.sparkContext.applicationId
-    ck = (app, sf_dir)
-    n_vecs = _N_VECS_CACHE.get(ck)
-    if n_vecs is None:
-        n_vecs = e.count()
-        _N_VECS_CACHE[ck] = n_vecs
+    # modulus, memoized while the table's file is unchanged — the
+    # count job re-ran per invocation (r12).
+    n_vecs = memo(spark, f"{sf_dir}:n-vecs", e, lambda f: f.count())
     qids = sorted(_BM25_QUERIES)
     qv = e.where(F.col("vec_id").isin(qids)).select(
         F.col("vec_id").cast("int").alias("query_id"),
@@ -2486,14 +2479,6 @@ _ULM_ITERS = 2
 _ULM_TOP = 200
 _ULM_NEG = "CAST(-1000000000 AS DOUBLE)"
 
-
-
-def _ulm_sj_spark(j: int) -> str:
-    prev = (f"CASE WHEN i - {j} = 0 THEN CAST(0 AS DOUBLE) "
-            f"ELSE element_at(acc, 2 * (i - {j}) - 1) END")
-    lp = f"element_at(lps, (i - 1) * {_ULM_MAXP} + {j})"
-    return (f"CASE WHEN {j} > i THEN CAST(-1000000000000000 AS DOUBLE) "
-            f"ELSE ({prev}) + {lp} END")
 
 
 def _ulm_sj_duck(j: int) -> str:

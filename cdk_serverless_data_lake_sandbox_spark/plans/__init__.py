@@ -44,10 +44,6 @@ def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df)
 
 
-def shuffle_count(df: DataFrame) -> int:
-    return formatted_plan(df).count("Exchange")
-
-
 def single_reducer_window_nodes(df_or_plan: DataFrame | str) -> list[int]:
     """Node ids of Window operators fed (directly in their input
     chain, before any fan-out) by an Exchange whose distribution is

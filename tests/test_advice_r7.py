@@ -75,23 +75,22 @@ def test_reliable_materializer_bit_identical_and_no_localcheckpoint(spark):
 
 def test_materializer_mode_resolution():
     """auto = local on local[...] masters, reliable anywhere else;
-    conf beats env beats default; unknown modes raise."""
+    the conf beats the default; unknown modes raise."""
     from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
         _materializer_mode,
     )
 
-    assert _materializer_mode("local[32]", None, None) == "local"
-    assert _materializer_mode("local[*]", None, None) == "local"
+    assert _materializer_mode("local[32]", None) == "local"
+    assert _materializer_mode("local[*]", None) == "local"
     # the cluster contract the verdict asked to pin: non-local masters
     # NEVER default to the executor-pinned localCheckpoint path
-    assert _materializer_mode("spark://host:7077", None, None) == "reliable"
-    assert _materializer_mode("yarn", None, None) == "reliable"
-    assert _materializer_mode("k8s://https://host", None, None) == "reliable"
-    assert _materializer_mode("spark://host:7077", "local", None) == "local"
-    assert _materializer_mode("local[4]", None, "reliable") == "reliable"
-    assert _materializer_mode("local[4]", "local", "reliable") == "local"
+    assert _materializer_mode("spark://host:7077", None) == "reliable"
+    assert _materializer_mode("yarn", None) == "reliable"
+    assert _materializer_mode("k8s://https://host", None) == "reliable"
+    assert _materializer_mode("spark://host:7077", "local") == "local"
+    assert _materializer_mode("local[4]", "reliable") == "reliable"
     with pytest.raises(ValueError):
-        _materializer_mode("local[4]", "bogus", None)
+        _materializer_mode("local[4]", "bogus")
 
 
 def test_pin_uses_localcheckpoint_in_local_mode(spark):
@@ -485,32 +484,6 @@ def test_minhash_index_format_stamp(spark, tmp_path):
     os.remove(os.path.join(idx, "_format.json"))  # pre-stamp index
     with pytest.raises(ValueError, match="rebuild"):
         minhash_index_query(spark, idx, probe)
-
-
-def test_pin_reliable_reclaims_superseded_iterations(spark):
-    """Reliable-mode pin() keeps at most _PIN_KEEP scratch dirs per
-    call site: a 6-round loop must not leave 6 frames on disk (review
-    finding: unbounded disk growth over long iterative jobs), and the
-    immediately-previous generation stays readable."""
-    from cdk_serverless_data_lake_sandbox_spark.operators import _helpers as H
-
-    spark.conf.set("spark.graft.materializer", "reliable")
-    try:
-        app = spark.sparkContext.applicationId
-        before = {s for (a, s) in H._PIN_HISTORY if a == app}
-        frames = []
-        for i in range(6):
-            frames.append(H.pin(spark.range(i, i + 3)))  # one call site
-        site_hists = [
-            h for (a, s), h in H._PIN_HISTORY.items()
-            if a == app and s not in before
-        ]
-        assert site_hists and max(len(h) for h in site_hists) <= H._PIN_KEEP
-        # newest and previous generation both readable
-        assert frames[-1].count() == 3
-        assert frames[-2].count() == 3
-    finally:
-        spark.conf.unset("spark.graft.materializer")
 
 
 def test_crawler_corrupt_record_hooks(spark, tmp_path):

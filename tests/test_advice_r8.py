@@ -10,10 +10,8 @@ ADVICE items:
    does not honor the Spark hidden-path convention) and a versioned
    v=N lake table root resolves to the NEWEST snapshot instead of
    unioning every snapshot with a spurious v column.
-3. pin() reliable-mode scratch reclamation documents the one-live-
-   lineage-per-site contract and gains an off-switch
-   (spark.graft.pin_reclaim=off) for callers composing multiple
-   lazily-held pinned frames.
+3. pin() reliable-mode scratch reclamation (now by recorded lineage;
+   its tests live in tests/test_scratch.py).
 4. crawl_delimited defaults corrupt_col="_corrupt": rows that widen
    past the sample horizon land loudly in the DLQ column instead of
    becoming silent all-NULLs.
@@ -118,42 +116,6 @@ def test_jdbc_parquet_load_skips_sidecars_and_old_versions(spark, tmp_path):
     empty.mkdir()
     with pytest.raises(FileNotFoundError):
         store.load_table_from_parquet("nothing", str(empty))
-
-
-# ------------------------------------------------------------- fix 3
-def test_pin_reclaim_off_switch_keeps_every_generation(spark):
-    from cdk_serverless_data_lake_sandbox_spark.operators import _helpers as H
-
-    spark.conf.set("spark.graft.materializer", "reliable")
-    spark.conf.set("spark.graft.pin_reclaim", "off")
-    before = {k: list(v) for k, v in H._PIN_HISTORY.items()}
-    try:
-        df = spark.range(10)
-        for _ in range(4):
-            df = H.pin(df.withColumn("id", F.col("id") + 1))
-        # reclamation is fully disabled: no history recorded, so no
-        # generation of this lineage can ever be deleted from under a
-        # live frame (deletion only happens when history rolls)
-        assert H._PIN_HISTORY == before
-        assert sorted(r.id for r in df.collect()) == list(range(4, 14))
-    finally:
-        spark.conf.unset("spark.graft.pin_reclaim")
-    # with reclaim back on (default), the same loop records history
-    # and keeps only _PIN_KEEP generations per site
-    try:
-        df = spark.range(10)
-        for _ in range(4):
-            df = H.pin(df.withColumn("id", F.col("id") + 1))
-        app = spark.sparkContext.applicationId
-        new_hists = [
-            hist
-            for (a, site), hist in H._PIN_HISTORY.items()
-            if a == app and hist != before.get((a, site))
-        ]
-        assert new_hists and all(len(h) <= H._PIN_KEEP for h in new_hists)
-        assert sorted(r.id for r in df.collect()) == list(range(4, 14))
-    finally:
-        spark.conf.unset("spark.graft.materializer")
 
 
 # ------------------------------------------------------------- fix 4
@@ -308,10 +270,10 @@ def test_local_cluster_master_resolves_to_reliable():
         _materializer_mode,
     )
 
-    assert _materializer_mode("local-cluster[2,2,1024]", None, None) == "reliable"
-    assert _materializer_mode("local[32]", None, None) == "local"
-    assert _materializer_mode("local[*]", None, None) == "local"
-    assert _materializer_mode("spark://host:7077", None, None) == "reliable"
+    assert _materializer_mode("local-cluster[2,2,1024]", None) == "reliable"
+    assert _materializer_mode("local[32]", None) == "local"
+    assert _materializer_mode("local[*]", None) == "local"
+    assert _materializer_mode("spark://host:7077", None) == "reliable"
 
 
 # ------------------------------------------------------------- fix 8

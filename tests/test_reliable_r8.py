@@ -7,7 +7,7 @@ analytics, pipeline, text, and the etl side-effect path — each run
 under `reliable` with localCheckpoint PATCHED TO RAISE, results
 compared bit-exactly against the local path. The full-registry proof
 is the DRIVER_SIM_r08_reliable.json artifact (every registered query
-swept under SPARK_GRAFT_MATERIALIZER=reliable)."""
+swept under the reliable materializer)."""
 
 from __future__ import annotations
 

@@ -30,6 +30,22 @@ def money_sum(col: Column | str, scale: int = 2, ndigits: int = 2) -> Column:
     return money(F.sum(dec(col, scale)), ndigits)
 
 
+def pairs_within(arr: str, emit: str, keep: str | None = None) -> Column:
+    """Every pair inside one array, expanded in-row: the array of
+    ``emit`` (SQL over the lambda variables ``x`` and ``y``) for each
+    ``x`` positioned before ``y`` in the array column ``arr``, kept
+    only where ``keep`` (SQL over ``x`` and ``y``) holds. Callers
+    explode it. This is the pair step of every posting/bucket
+    candidate generator: pair work is the sum of squared posting
+    sizes, with no self-join of the member rows. Sort ``arr`` first
+    when orientation matters — over sorted distinct elements, every
+    pair comes out with ``x < y``."""
+    ys = f"slice({arr}, i + 2, size({arr}))"
+    if keep is not None:
+        ys = f"filter({ys}, y -> {keep})"
+    return F.expr(f"flatten(transform({arr}, (x, i) -> transform({ys}, y -> {emit})))")
+
+
 def round_rat(num_sql: str, den_sql: str, dp: int, wide: bool = False) -> Column:
     """Exact half-away-from-zero rounding of the rational num/den to
     ``dp`` decimals, in 64-bit integer arithmetic.

@@ -11,7 +11,7 @@ inside buckets. All hashing/signature math is JVM-side expressions
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -19,9 +19,11 @@ from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     materialize,
     memo,
+    pairs_within,
     round_rat,
     sql_round_rat,
 )
+from cdk_serverless_data_lake_sandbox_spark.operators.multimodal import hash_band_pairs
 from cdk_serverless_data_lake_sandbox_spark.registry import register
 
 # 3-word shingles as the similarity unit. The word array is projected
@@ -285,6 +287,29 @@ def _pref_expr(tau: float) -> str:
     return f"m.pos < (m.n_sh - CAST(ceil(m.n_sh * {tau}D) AS INT) + 1)"
 
 
+def _hot_sides(
+    inv: DataFrame, hot: DataFrame, tau: float
+) -> tuple[DataFrame, DataFrame]:
+    """The two member-row sides of the hot-shingle self-join (see
+    :func:`_resolve_hot`): every posting row of a hot shingle as
+    (shingle, {a,b}_id, n_{a,b}, pref_{a,b}, pos_{a,b}), with the
+    Column form of :func:`_pref_expr`'s prefix flag. Each caller joins
+    them on ``shingle`` under its own pair condition."""
+    pref = F.col("pos") < (F.col("n_sh") - F.ceil(F.col("n_sh") * tau) + 1)
+    members = inv.join(F.broadcast(hot), "shingle", "left_semi")
+    a, b = (
+        members.select(
+            "shingle",
+            F.col("doc_id").alias(f"{s}_id"),
+            F.col("n_sh").alias(f"n_{s}"),
+            pref.alias(f"pref_{s}"),
+            F.col("pos").alias(f"pos_{s}"),
+        )
+        for s in "ab"
+    )
+    return a, b
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     tau: float = _JACCARD_TAU,
@@ -349,16 +374,12 @@ def ngram_jaccard_pairs(
             f")))"
         ).alias("ms")
     )
-    pair_expr = f"""
-    flatten(transform(ms, (x, i) ->
-      transform(
-        filter(slice(ms, i + 2, size(ms)),
-               y -> (x.pref OR y.pref)
-                AND y.n_sh >= x.n_sh * {tau}D
-                AND x.n_sh >= y.n_sh * {tau}D),
-        y -> struct(x.doc_id AS a_id, y.doc_id AS b_id,
-                    x.n_sh AS n_a, y.n_sh AS n_b))))
-    """
+    pairs = pairs_within(
+        "ms",
+        "struct(x.doc_id AS a_id, y.doc_id AS b_id, x.n_sh AS n_a, y.n_sh AS n_b)",
+        keep=f"(x.pref OR y.pref) AND y.n_sh >= x.n_sh * {tau}D"
+        f" AND x.n_sh >= y.n_sh * {tau}D",
+    )
     # PPJoin-style count filter (Xiao et al., WWW'08): the groupBy
     # that deduplicates candidate pairs ALSO counts how many prefix-
     # qualifying shingles each pair shares (same shuffle as the old
@@ -374,27 +395,9 @@ def ngram_jaccard_pairs(
         F.ceil(F.col("n_a") * tau) - 1, F.ceil(F.col("n_b") * tau) - 1
     )
     min_overlap = F.ceil((F.col("n_a") + F.col("n_b")) * (tau / (1.0 + tau)))
-    all_pairs = (
-        postings.select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select("p.*")
-    )
+    all_pairs = postings.select(F.explode(pairs).alias("p")).select("p.*")
     if hot is not None:
-        pref = F.col("pos") < (
-            F.col("n_sh") - F.ceil(F.col("n_sh") * tau) + 1
-        )
-        hot_members = inv.join(F.broadcast(hot), "shingle", "left_semi")
-        ha = hot_members.select(
-            "shingle",
-            F.col("doc_id").alias("a_id"),
-            F.col("n_sh").alias("n_a"),
-            pref.alias("pref_a"),
-        )
-        hb = hot_members.select(
-            "shingle",
-            F.col("doc_id").alias("b_id"),
-            F.col("n_sh").alias("n_b"),
-            pref.alias("pref_b"),
-        )
+        ha, hb = _hot_sides(inv, hot, tau)
         hot_pairs = (
             ha.join(hb, "shingle")
             .where(
@@ -483,15 +486,35 @@ def _minhash_signatures(docs: DataFrame, scratch_key: str | None = None) -> Data
     )
 
 
-def _band_key_i(i: int) -> str:
-    """Spark fragment: the band-``i`` bucket key — the 4 signature
-    values joined as a string. Portable by construction (bigint ->
-    string casts agree across engines); the string key costs ~50
-    bytes on the band shuffle vs 8 for the old xxhash64 key, which
-    is noise next to the signature column riding along anyway."""
+def minhash_bands() -> Column:
+    """The LSH band keys of the MinHash signature column ``sig``: one
+    (band, key) struct per band of ``_BAND_ROWS`` signature values,
+    the key being those values joined as a string. Explode it with
+    ``F.inline`` into ``band``/``key`` columns. The inline pair
+    generator, the persisted index (build and probe) and the
+    streaming gate all bucket through this one definition, so they
+    always agree. The string key is portable by construction (bigint
+    -> string casts agree across engines); it costs ~50 bytes on the
+    band shuffle vs 8 for an xxhash64 key, which is noise next to the
+    signature column riding along anyway."""
+    return F.expr(
+        "array("
+        + ", ".join(
+            f"named_struct('band', {i}, 'key', array_join(transform("
+            f"slice(sig, {i * _BAND_ROWS + 1}, {_BAND_ROWS}),"
+            f" x -> CAST(x AS STRING)), ','))"
+            for i in range(_N_PERM // _BAND_ROWS)
+        )
+        + ")"
+    )
+
+
+def _sig_agreement(a: str, b: str) -> str:
+    """SQL: estimated Jaccard of two MinHash signatures, the share of
+    positions where they agree."""
     return (
-        f"array_join(transform(slice(sig, {i * _BAND_ROWS + 1}, {_BAND_ROWS}),"
-        f" x -> CAST(x AS STRING)), ',')"
+        f"CAST(size(filter(zip_with({a}, {b}, (u, v) -> u = v), e -> e))"
+        f" AS DOUBLE) / {_N_PERM}"
     )
 
 
@@ -543,12 +566,6 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate generation is near-linear in corpus size."""
     docs = _docs(spark, sf_dir)
     sigs = _minhash_signatures(docs, scratch_key=f"ngram-phashed:{sf_dir}")
-
-    n_bands = _N_PERM // _BAND_ROWS
-    band_arrays = ", ".join(
-        f"named_struct('band', {i}, 'key', {_band_key_i(i)})"
-        for i in range(n_bands)
-    )
     # The signature rides along through the band explode and pairs are
     # generated inside each bucket (groupBy + collect_list) rather
     # than by a bucket self-join: a self-join would recompute the
@@ -557,27 +574,18 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lists are bounded by the band collision rate; a pathological
     # cluster of k identical docs costs k^2 pairs — inherent in the
     # pair output itself, not this plan.
-    banded = sigs.select(
-        "doc_id", "sig", F.explode(F.expr(f"array({band_arrays})")).alias("b")
-    ).select("doc_id", "sig", F.col("b.band").alias("band"), F.col("b.key").alias("key"))
-
     buckets = (
-        banded.groupBy("band", "key")
+        sigs.select("doc_id", "sig", F.inline(minhash_bands()))
+        .groupBy("band", "key")
         .agg(F.array_sort(F.collect_list(F.struct("doc_id", "sig"))).alias("ms"))
         .where(F.size("ms") > 1)
     )
-    pair_expr = f"""
-    flatten(transform(ms, (x, i) ->
-      transform(slice(ms, i + 2, size(ms)), y ->
-        struct(x.doc_id AS a_id, y.doc_id AS b_id,
-          CAST(size(filter(zip_with(x.sig, y.sig, (u, v) -> u = v), e -> e))
-               AS DOUBLE) / {_N_PERM} AS est_jaccard))))
-    """
-    return (
-        buckets.select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select("p.*")
-        .distinct()
+    pairs = pairs_within(
+        "ms",
+        "struct(x.doc_id AS a_id, y.doc_id AS b_id,"
+        f" {_sig_agreement('x.sig', 'y.sig')} AS est_jaccard)",
     )
+    return buckets.select(F.explode(pairs).alias("p")).select("p.*").distinct()
 
 
 # ---------------------------------------------------------------- C14
@@ -755,45 +763,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"(CASE WHEN v{j} > 0 THEN CAST({_simhash_addend(j)} AS BIGINT) ELSE 0L END)"
         for j in range(64)
     )
-    # chunk keys summed from the votes directly (always positive, no
-    # sign-extension subtleties to mirror across engines)
-    chunk_exprs = [
-        " + ".join(
-            f"(CASE WHEN v{16 * c + j} > 0 THEN {1 << j} ELSE 0 END)"
-            for j in range(16)
-        )
-        for c in range(4)
-    ]
-    sigs = per_doc.select(
-        "doc_id",
-        F.expr(sim_expr).alias("simhash"),
-        *[F.expr(e).alias(f"ck{c}") for c, e in enumerate(chunk_exprs)],
-    )
-
-    chunks = ", ".join(
-        f"named_struct('chunk', {c}, 'key', ck{c})" for c in range(4)
-    )
-    banded = sigs.select(
-        "doc_id", "simhash", F.explode(F.expr(f"array({chunks})")).alias("b")
-    ).select("doc_id", "simhash", F.col("b.chunk").alias("chunk"), F.col("b.key").alias("key"))
-    # Same single-pass bucket pairing as MinHash: the 64-vote
-    # signature aggregation runs once, not once per join side.
-    buckets = (
-        banded.groupBy("chunk", "key")
-        .agg(F.array_sort(F.collect_list(F.struct("doc_id", "simhash"))).alias("ms"))
-        .where(F.size("ms") > 1)
-    )
-    pair_expr = """
-    flatten(transform(ms, (x, i) ->
-      transform(slice(ms, i + 2, size(ms)), y ->
-        struct(x.doc_id AS a_id, y.doc_id AS b_id,
-               bit_count(x.simhash ^ y.simhash) AS hamming))))
-    """
-    return (
-        buckets.select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select("p.*")
-        .distinct()
-        .where(F.col("hamming") <= 16)
+    sigs = per_doc.select("doc_id", F.expr(sim_expr).alias("simhash"))
+    # The oracle's vote-derived chunk keys are exactly bits
+    # 16c..16c+15 of the signature, i.e. the Hamming band keys.
+    return hash_band_pairs(sigs, "simhash", 16).select(
+        F.col("a").alias("a_id"), F.col("b").alias("b_id"), "hamming"
     )
 
 
@@ -985,39 +959,20 @@ def containment_pairs(
             f" m.pos AS pos)))"
         ).alias("ms")
     )
-    pair_expr = f"""
-    flatten(transform(ms, (x, i) ->
-      transform(
-        filter(slice(ms, i + 2, size(ms)), y -> x.pref),
-        y -> struct(x.doc_id AS a_id, y.doc_id AS b_id, x.n_sh AS n_a,
-                    y.n_sh AS n_b, y.pos AS pos_b))))
-    """
+    pairs = pairs_within(
+        "ms",
+        "struct(x.doc_id AS a_id, y.doc_id AS b_id, x.n_sh AS n_a,"
+        " y.n_sh AS n_b, y.pos AS pos_b)",
+        keep="x.pref",
+    )
     min_overlap = F.ceil(F.col("n_a") * tau)
     positional_bound = F.col("c") + F.least(
         F.ceil(F.col("n_a") * tau) - 1,
         F.col("n_b") - 1 - F.col("max_pos_b"),
     )
-    all_pairs = (
-        postings.select(F.explode(F.expr(pair_expr)).alias("p"))
-        .select("p.*")
-    )
+    all_pairs = postings.select(F.explode(pairs).alias("p")).select("p.*")
     if hot is not None:
-        pref = F.col("pos") < (
-            F.col("n_sh") - F.ceil(F.col("n_sh") * tau) + 1
-        )
-        hot_members = inv.join(F.broadcast(hot), "shingle", "left_semi")
-        ha = hot_members.select(
-            "shingle",
-            F.col("doc_id").alias("a_id"),
-            F.col("n_sh").alias("n_a"),
-            pref.alias("pref_a"),
-        )
-        hb = hot_members.select(
-            "shingle",
-            F.col("doc_id").alias("b_id"),
-            F.col("n_sh").alias("n_b"),
-            F.col("pos").alias("pos_b"),
-        )
+        ha, hb = _hot_sides(inv, hot, tau)
         # the sorted-posting order is (n_sh, doc_id); replicate it in
         # the join condition so the opener is the smaller-set side
         hot_pairs = (
@@ -1325,17 +1280,6 @@ def cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MINHASH_INDEX_FORMAT = "horner-universal-v2"
 
 
-def _band_key_expr() -> str:
-    # same portable per-band key as dedup_minhash_lsh (_band_key_i):
-    # index and inline paths must bucket identically, and the string
-    # key keeps the persisted index engine-replayable
-    n_bands = _N_PERM // _BAND_ROWS
-    return ", ".join(
-        f"named_struct('band', {i}, 'key', {_band_key_i(i)})"
-        for i in range(n_bands)
-    )
-
-
 def minhash_index_build(docs: DataFrame, index_path: str) -> dict:
     """Persist the MinHash LSH index as a lake artifact — the
     production shape of corpus dedup, symmetric with the IVF index
@@ -1362,9 +1306,7 @@ def minhash_index_build(docs: DataFrame, index_path: str) -> dict:
         _json.dump({"format": _MINHASH_INDEX_FORMAT}, fh)
     spark = docs.sparkSession
     stored = spark.read.parquet(index_path + "/sig")
-    banded = stored.select(
-        "doc_id", F.explode(F.expr(f"array({_band_key_expr()})")).alias("b")
-    ).select(F.col("b.band").alias("band"), F.col("b.key").alias("key"), "doc_id")
+    banded = stored.select(F.inline(minhash_bands()), "doc_id")
     banded.write.mode("overwrite").partitionBy("band").parquet(
         index_path + "/bands"
     )
@@ -1418,9 +1360,7 @@ def minhash_index_query(
     probe = new_sigs.select(
         F.col("doc_id").alias("new_id"),
         F.col("sig").alias("new_sig"),
-        F.explode(F.expr(f"array({_band_key_expr()})")).alias("b"),
-    ).select(
-        "new_id", "new_sig", F.col("b.band").alias("band"), F.col("b.key").alias("key")
+        F.inline(minhash_bands()),
     )
     bands = spark.read.parquet(index_path + "/bands").select(
         "band", "key", F.col("doc_id").alias("corpus_id")
@@ -1433,15 +1373,13 @@ def minhash_index_query(
     sig = spark.read.parquet(index_path + "/sig").select(
         F.col("doc_id").alias("corpus_id"), F.col("sig").alias("corpus_sig")
     )
-    est = (
-        F.size(
-            F.expr("filter(zip_with(new_sig, corpus_sig, (u, v) -> u = v), e -> e)")
-        ).cast("double")
-        / _N_PERM
-    )
     return (
         cand.join(sig, "corpus_id")
-        .select("new_id", "corpus_id", est.alias("est_jaccard"))
+        .select(
+            "new_id",
+            "corpus_id",
+            F.expr(_sig_agreement("new_sig", "corpus_sig")).alias("est_jaccard"),
+        )
         .where(F.col("est_jaccard") >= min_est_jaccard)
     )
 

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     materialize_lazy,
+    pairs_within,
     round_rat,
     sql_round_rat,
 )
@@ -270,12 +271,7 @@ def winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = (
         posting.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ds, (x, i) -> transform("
-                    "slice(ds, i + 2, size(ds)), y -> struct(x AS a, y AS b))))"
-                )
-            ).alias("e")
+            F.explode(pairs_within("ds", "struct(x AS a, y AS b)")).alias("e")
         )
         .groupBy(F.col("e.a").alias("doc_a"), F.col("e.b").alias("doc_b"))
         .agg(F.count("*").alias("n_shared"))

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     pin,
+    pairs_within,
     round_rat,
     sql_round_rat,
 )
@@ -747,16 +748,9 @@ def item_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n1 = cp.groupBy("part").agg(F.count("*").alias("n"))
     n_cust = cp.select("cust").distinct().count()
-    sets = cp.groupBy("cust").agg(F.collect_set("part").alias("ps"))
+    sets = cp.groupBy("cust").agg(F.array_sort(F.collect_set("part")).alias("ps"))
     pairs = (
-        sets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, x -> transform("
-                    "filter(ps, y -> y > x), y -> struct(x AS pa, y AS pb))))"
-                )
-            ).alias("e")
-        )
+        sets.select(F.explode(pairs_within("ps", "struct(x AS pa, y AS pb)")).alias("e"))
         .select("e.pa", "e.pb")
         .groupBy("pa", "pb")
         .agg(F.count("*").alias("n_ab"))
@@ -847,16 +841,11 @@ def copurchase_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank arithmetic is float."""
     li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
     lp = li.select("l_orderkey", "l_partkey").distinct()
-    sets = lp.groupBy("l_orderkey").agg(F.collect_set("l_partkey").alias("ps"))
+    sets = lp.groupBy("l_orderkey").agg(
+        F.array_sort(F.collect_set("l_partkey")).alias("ps")
+    )
     wund = (
-        sets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, x -> transform("
-                    "filter(ps, y -> y > x), y -> struct(x AS pa, y AS pb))))"
-                )
-            ).alias("e")
-        )
+        sets.select(F.explode(pairs_within("ps", "struct(x AS pa, y AS pb)")).alias("e"))
         .groupBy("e.pa", "e.pb")
         .agg(F.count("*").alias("w"))
     )
@@ -1308,11 +1297,7 @@ def copurchase_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         sets.select(
             "m",
             F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) -> transform("
-                    "slice(ps, i + 2, size(ps)),"
-                    " y -> struct(least(x, y) AS pa, greatest(x, y) AS pb))))"
-                )
+                pairs_within("ps", "struct(least(x, y) AS pa, greatest(x, y) AS pb)")
             ).alias("e"),
         )
         .select("m", "e.pa", "e.pb")

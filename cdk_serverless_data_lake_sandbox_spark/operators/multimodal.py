@@ -36,7 +36,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -51,6 +51,7 @@ from pyspark.sql.types import (
 )
 
 from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
+from cdk_serverless_data_lake_sandbox_spark.operators._helpers import pairs_within
 from cdk_serverless_data_lake_sandbox_spark.registry import register
 
 _FRAME_BYTES = 16  # fake video frame size
@@ -1758,40 +1759,47 @@ def image_dhash(media: DataFrame) -> DataFrame:
 _DHASH_HAMMING_MAX = 8
 
 
+def hamming_chunks(col: str) -> Column:
+    """The Hamming band keys of 64-bit hash column ``col``: one
+    (chunk, key) struct per 16-bit chunk, key = bits 16c..16c+15.
+    Two hashes within hamming 3 share at least one chunk exactly.
+    Explode it with ``F.inline`` into ``chunk``/``key`` columns; the
+    batch pair tail and the streaming image gate's persisted index
+    both band through it."""
+    return F.expr(
+        "array("
+        + ", ".join(
+            f"named_struct('chunk', {c}, 'key', shiftright({col}, {c * 16}) & 65535)"
+            for c in range(4)
+        )
+        + ")"
+    )
+
+
 def hash_band_pairs(sigs: DataFrame, col: str, hamming_max: int) -> DataFrame:
-    """The RELATIONAL tail of the 64-bit perceptual dedups, shared by
-    the image (C108) and audio (C109) ops and their planted-signature
-    oracle twins (r9 verdict item 3): band ``col`` into four 16-bit
-    chunks, expand candidate pairs INSIDE each posting (never a
+    """The RELATIONAL tail of the 64-bit hash dedups, shared by text
+    SimHash, the image (C108) and audio (C109) ops and their planted-
+    signature oracle twins (r9 verdict item 3): band ``col`` into four
+    16-bit chunks, expand candidate pairs INSIDE each posting (never a
     pairwise self-join), score by exact hamming via bit_count(xor),
     keep <= ``hamming_max``, DISTINCT across chunks. Returns
-    (a, b, hamming)."""
-    chunks = ", ".join(
-        f"named_struct('chunk', {c}, 'key', shiftright({col}, {c * 16}) & 65535)"
-        for c in range(4)
-    )
-    banded = sigs.select(
-        "doc_id", col, F.explode(F.expr(f"array({chunks})")).alias("b")
-    ).select(
-        "doc_id", col, F.col("b.chunk").alias("chunk"), F.col("b.key").alias("key")
-    )
+    (a, b, hamming), a < b, unordered."""
     buckets = (
-        banded.groupBy("chunk", "key")
+        sigs.select("doc_id", col, F.inline(hamming_chunks(col)))
+        .groupBy("chunk", "key")
         .agg(F.array_sort(F.collect_list(F.struct("doc_id", col))).alias("ms"))
         .where(F.size("ms") > 1)
     )
-    pair_expr = f"""
-      flatten(transform(ms, (x, i) ->
-        transform(slice(ms, i + 2, size(ms) - i - 1), y ->
-          named_struct('a', x.doc_id, 'b', y.doc_id,
-                       'hamming', bit_count(x.{col} ^ y.{col})))))
-    """
+    pairs = pairs_within(
+        "ms",
+        f"named_struct('a', x.doc_id, 'b', y.doc_id,"
+        f" 'hamming', bit_count(x.{col} ^ y.{col}))",
+    )
     return (
-        buckets.select(F.explode(F.expr(pair_expr)).alias("p"))
+        buckets.select(F.explode(pairs).alias("p"))
         .select("p.a", "p.b", "p.hamming")
         .where(F.col("hamming") <= hamming_max)
         .distinct()
-        .orderBy("a", "b")
     )
 
 

@@ -17,6 +17,7 @@ from pyspark.sql.window import Window
 from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     pin,
+    pairs_within,
     round_rat,
     sql_round_rat,
 )
@@ -2962,10 +2963,7 @@ def _knn_graph_frame(e: DataFrame, ev: DataFrame | None = None) -> DataFrame:
         .select("src", "dst", "cosine")
     )
     w_rev = Window.partitionBy("dst").orderBy(F.desc("cosine"), "src")
-    pair_expr = """
-    flatten(transform(ps, (x, i) ->
-      transform(slice(ps, i + 2, size(ps)), y -> struct(x AS u, y AS w))))
-    """
+    pairs = pairs_within("ps", "struct(x AS u, y AS w)")
     for _ in range(_KNN_ITERS):
         rev = (
             edges.withColumn("rk", F.row_number().over(w_rev))
@@ -2979,7 +2977,7 @@ def _knn_graph_frame(e: DataFrame, ev: DataFrame | None = None) -> DataFrame:
             F.array_sort(F.collect_list("partner")).alias("ps")
         )
         cand = (
-            posts.select(F.explode(F.expr(pair_expr)).alias("p"))
+            posts.select(F.explode(pairs).alias("p"))
             .select("p.u", "p.w")
             .distinct()
         )

@@ -22,6 +22,7 @@ from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     money,
     money_sum,
     pin,
+    pairs_within,
     round_rat,
     sql_round_rat,
 )
@@ -1026,13 +1027,9 @@ def brand_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     baskets = order_brands.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_list("p_brand")).alias("brands")
     ).where(F.size("brands") > 1)
-    pair_expr = """
-    flatten(transform(brands, (x, i) ->
-      transform(slice(brands, i + 2, size(brands)),
-                y -> struct(x AS brand_a, y AS brand_b))))
-    """
+    pairs = pairs_within("brands", "struct(x AS brand_a, y AS brand_b)")
     return (
-        baskets.select(F.explode(F.expr(pair_expr)).alias("p"))
+        baskets.select(F.explode(pairs).alias("p"))
         .select("p.*")
         .groupBy("brand_a", "brand_b")
         .agg(F.count("*").alias("n_orders"))
@@ -1531,13 +1528,9 @@ def brand_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     baskets = ob.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_list("p_brand")).alias("brands")
     ).where(F.size("brands") > 1)
-    pair_expr = """
-    flatten(transform(brands, (x, i) ->
-      transform(slice(brands, i + 2, size(brands)),
-                y -> struct(x AS brand_a, y AS brand_b))))
-    """
+    pairs = pairs_within("brands", "struct(x AS brand_a, y AS brand_b)")
     pairs = (
-        baskets.select(F.explode(F.expr(pair_expr)).alias("p"))
+        baskets.select(F.explode(pairs).alias("p"))
         .select("p.*")
         .groupBy("brand_a", "brand_b")
         .agg(F.count("*").alias("n_both"))
@@ -3045,10 +3038,8 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     slopes = pts.select(
         "brand",
         "pts",
-        F.expr(
-            "array_sort(flatten(transform(pts, (p, i) ->"
-            " transform(slice(pts, i + 2, size(pts) - i - 1), q ->"
-            " (q.y - p.y) / CAST(q.x - p.x AS DOUBLE)))))"
+        F.array_sort(
+            pairs_within("pts", "(y.y - x.y) / CAST(y.x - x.x AS DOUBLE)")
         ).alias("ss"),
     )
     med = slopes.select(

@@ -16,6 +16,7 @@ from cdk_serverless_data_lake_sandbox_spark.catalog import load_tables
 from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
     materialize,
     memo,
+    pairs_within,
     pin,
     round_rat,
     sql_round_rat,
@@ -585,16 +586,15 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     sizes = ss.groupBy("source").agg(F.count("*").cast("bigint").alias("n"))
-    pair_expr = """
-    flatten(transform(ss_list, (x, i) ->
-      transform(slice(ss_list, i + 2, size(ss_list)),
-                y -> struct(x AS src_a, y AS src_b))))
-    """
     inter = (
         ss.groupBy("shingle")
         .agg(F.array_sort(F.collect_set("source")).alias("ss_list"))
         .where(F.size("ss_list") > 1)
-        .select(F.explode(F.expr(pair_expr)).alias("p"))
+        .select(
+            F.explode(
+                pairs_within("ss_list", "struct(x AS src_a, y AS src_b)")
+            ).alias("p")
+        )
         .groupBy(F.col("p.src_a").alias("src_a"), F.col("p.src_b").alias("src_b"))
         .agg(F.count("*").cast("bigint").alias("i"))
     )

@@ -948,8 +948,8 @@ def stream_minhash_dedup_gate(
     import os
 
     from cdk_serverless_data_lake_sandbox_spark.operators.dedup import (
-        _band_key_expr,
         _minhash_signatures,
+        minhash_bands,
         minhash_index_query,
     )
 
@@ -1038,15 +1038,7 @@ def stream_minhash_dedup_gate(
             sigs = sigs.join(already, "doc_id", "left_anti")
         sigs.write.mode("append").parquet(sig_dir)
         (
-            sigs.select(
-                "doc_id",
-                F.explode(F.expr(f"array({_band_key_expr()})")).alias("b"),
-            )
-            .select(
-                F.col("b.band").alias("band"),
-                F.col("b.key").alias("key"),
-                "doc_id",
-            )
+            sigs.select(F.inline(minhash_bands()), "doc_id")
             .write.mode("append")
             .partitionBy("band")
             .parquet(index_path + "/bands")
@@ -1479,6 +1471,7 @@ def stream_image_dedup_gate(
     import os
 
     from cdk_serverless_data_lake_sandbox_spark.operators.multimodal import (
+        hamming_chunks,
         image_dhash,
     )
 
@@ -1493,13 +1486,7 @@ def stream_image_dedup_gate(
             .agg(F.min("doc_id").alias("doc_id"))
             .select("doc_id", "dhash")
         )
-        chunk_expr = ", ".join(
-            f"named_struct('chunk', {c}, 'key', shiftright(dhash, {c * 16}) & 65535)"
-            for c in range(4)
-        )
-        probe = sigs.select(
-            "doc_id", "dhash", F.explode(F.expr(f"array({chunk_expr})")).alias("b")
-        ).select("doc_id", "dhash", F.col("b.chunk").alias("chunk"), F.col("b.key").alias("key"))
+        probe = sigs.select("doc_id", "dhash", F.inline(hamming_chunks("dhash")))
         idx_path = os.path.join(index_dir, "bands")
         dup_ids = None
         if os.path.exists(os.path.join(idx_path, "_SUCCESS")) or any(
@@ -1536,12 +1523,7 @@ def stream_image_dedup_gate(
             ).partitionBy("batch_id").parquet(os.path.join(out_dir, "admitted"))
             (
                 fresh.select(
-                    "doc_id", "dhash",
-                    F.explode(F.expr(f"array({chunk_expr})")).alias("b"),
-                )
-                .select(
-                    "doc_id", "dhash",
-                    F.col("b.chunk").alias("chunk"), F.col("b.key").alias("key"),
+                    "doc_id", "dhash", F.inline(hamming_chunks("dhash")),
                     F.lit(batch_id).alias("batch_id"),
                 )
                 .write.mode("overwrite")

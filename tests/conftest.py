@@ -47,7 +47,11 @@ def spark():
         # 2-batch stateful availableNow query is 4.7 s at 8
         # partitions, 2.4 s at 2). Full tier keeps the r11 config.
         shuffle_partitions=8 if FULL_TIER else 4,
-        extra_conf={"spark.sql.warehouse.dir": wh},
+        # The suite's data is small, but one JVM runs every test and
+        # G1 grows its heap towards the cap instead of collecting: at
+        # the 16g default, a 4-core 16 GB host reached 15 GB resident
+        # and the kernel OOM-killed the JVM mid-suite. 8g bounds it.
+        extra_conf={"spark.sql.warehouse.dir": wh, "spark.driver.memory": "8g"},
     )
     yield s
     s.stop()

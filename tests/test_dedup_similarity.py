@@ -36,6 +36,62 @@ def test_simhash_pairs_sane(spark):
         assert recall >= 0.5, f"simhash recall on strong pairs {recall:.2f}"
 
 
+def test_pairs_within_matches_combinations(spark):
+    """pairs_within emits exactly itertools.combinations(arr, 2), in
+    that order, for empty, singleton, pair and duplicate-bearing
+    arrays; ``keep`` filters those pairs and nothing else."""
+    from itertools import combinations
+
+    from cdk_serverless_data_lake_sandbox_spark.operators._helpers import (
+        pairs_within,
+    )
+
+    arrays = [[], [7], [3, 1], [5, 2, 9, 2, 4, 8]]  # 2 occurs twice
+    df = spark.createDataFrame(list(enumerate(arrays)), "k INT, arr ARRAY<INT>")
+
+    def got(keep=None):
+        p = pairs_within("arr", "struct(x AS a, y AS b)", keep).alias("p")
+        return {r.k: [tuple(t) for t in r.p] for r in df.select("k", p).collect()}
+
+    assert got() == {k: list(combinations(a, 2)) for k, a in enumerate(arrays)}
+    assert got("x < y") == {
+        k: [(x, y) for x, y in combinations(a, 2) if x < y]
+        for k, a in enumerate(arrays)
+    }
+    # non-struct emit: the Theil-Sen pairwise slope over (x, y) points
+    pts = [(1, 2.0), (2, 5.0), (4, 4.0), (5, 4.0), (7, 1.0), (9, 9.0)]
+    ps = spark.createDataFrame(
+        [(pts,)], "pts ARRAY<STRUCT<x: INT, y: DOUBLE>>"
+    ).select(
+        pairs_within("pts", "(y.y - x.y) / CAST(y.x - x.x AS DOUBLE)").alias("s")
+    )
+    want = [(q[1] - p[1]) / (q[0] - p[0]) for p, q in combinations(pts, 2)]
+    assert ps.first().s == want
+
+
+def test_pair_and_band_expansions_have_one_definition():
+    """Regrowth guard: the in-row pair expansion is written only in
+    ``pairs_within``, and each LSH band-key scheme (MinHash ``band``,
+    Hamming ``chunk``) has exactly one definition site."""
+    import pathlib
+    import re
+
+    import cdk_serverless_data_lake_sandbox_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    srcs = {p.relative_to(root).as_posix(): p.read_text() for p in root.rglob("*.py")}
+    assert "slice({arr}, i + 2" in srcs["operators/_helpers.py"]
+    hand = [
+        name
+        for name, src in srcs.items()
+        if name != "operators/_helpers.py" and re.search(r"slice\(\w+, i \+ 2", src)
+    ]
+    assert not hand, f"hand-written pair expansion in {hand}; use pairs_within"
+    for key in ("named_struct('band'", "named_struct('chunk'"):
+        sites = [name for name, src in srcs.items() for _ in range(src.count(key))]
+        assert len(sites) == 1, (key, sites)
+
+
 def test_ann_lsh_recall_vs_bruteforce(spark):
     exact = _Q["ann_topk_bruteforce"](spark, SF_MEDIUM).collect()
     truth = {(r.query_id, r.neighbor_id) for r in exact}

@@ -433,8 +433,8 @@ def test_minhash_index_compaction_preserves_results(spark, tmp_path):
     from cdk_serverless_data_lake_sandbox_spark.operators.dedup import (
         minhash_index_build,
         minhash_index_compact,
+        minhash_bands,
         minhash_index_query,
-        _band_key_expr,
         _minhash_signatures,
     )
     from pyspark.sql import functions as FF
@@ -449,14 +449,7 @@ def test_minhash_index_compaction_preserves_results(spark, tmp_path):
         sigs = _minhash_signatures(part)
         sigs.write.mode("append").parquet(idx + "/sig")
         (
-            sigs.select(
-                "doc_id", FF.explode(FF.expr(f"array({_band_key_expr()})")).alias("b")
-            )
-            .select(
-                FF.col("b.band").alias("band"),
-                FF.col("b.key").alias("key"),
-                "doc_id",
-            )
+            sigs.select(FF.inline(minhash_bands()), "doc_id")
             .write.mode("append")
             .partitionBy("band")
             .parquet(idx + "/bands")

@@ -256,3 +256,33 @@ def test_plan_profile_counters(spark):
     q6 = plan_profile(qs["q6_forecast_revenue"](spark, SF_MEDIUM))
     assert q6["scans"] == 1 and q6["pushed"] >= 1
     assert q6["bhj"] == 0 and q6["smj"] == 0
+
+
+# Plan shape of the banded pair generators, measured at the commit
+# before they moved onto the shared pair/band operators
+# (``pairs_within``, ``minhash_bands``, ``hash_band_pairs``): the
+# move must not grow either plan. dedup_minhash_lsh is the op the
+# ``curation`` benchmark times.
+_BAND_PAIR_PLANS = {
+    "dedup_minhash_lsh": (
+        {"exchanges": 3, "single_part": 0, "bhj": 0, "smj": 0, "cartesian": 0,
+         "single_windows": 0, "scans": 1, "pushed": 0},
+        3,
+    ),
+    "dedup_simhash": (
+        {"exchanges": 3, "single_part": 0, "bhj": 0, "smj": 0, "cartesian": 0,
+         "single_windows": 0, "scans": 1, "pushed": 0},
+        3,
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_BAND_PAIR_PLANS))
+def test_band_pair_plan_shape_pinned(spark, name):
+    from cdk_serverless_data_lake_sandbox_spark.plans import plan_profile
+
+    profile, n_generate = _BAND_PAIR_PLANS[name]
+    plan = formatted_plan(_Q[name](spark, SF_MEDIUM))
+    assert plan_profile(plan) == profile, plan
+    # tree entries only ("+- Generate (n)"), not the detail section
+    assert plan.count("- Generate") == n_generate, plan

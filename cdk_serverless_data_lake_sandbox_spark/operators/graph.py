@@ -8,18 +8,31 @@ fully deterministic PageRank whose float-sensitive sums accumulate in
 DECIMAL so a DuckDB oracle can reproduce it hash-exactly (the same
 trick ``semantic_dedup``'s oracle uses for k-means centroids).
 
+Iteration runs on two shared loops, each pinning its state once per
+round (materialize and truncate lineage):
+
+- :func:`_rank_walk` — the fixed-round contribute/collect walk behind
+  :func:`pagerank`, :func:`personalized_pagerank` and
+  ``copurchase_pagerank_weighted``: shuffle on src to join ranks,
+  shuffle on dst to sum contributions.
+- :func:`_delta_fixpoint` — the early-stopping frontier loop behind
+  :func:`coreness_frame`, :func:`lpa_labels` and
+  :func:`bfs_distances`: once few nodes changed, only their
+  neighbourhood recomputes, and a round with no change ends the loop.
+
 Scale notes: the co-purchase edge build shuffles on orderkey once
 (per-order part lists are tiny, so the in-order pair expansion is
-bounded); each PageRank iteration is the standard two-shuffle
-contribute/collect plan — shuffle on src to join ranks, shuffle on
-dst to sum contributions. Degree is folded into the edge list once so
-iterations never re-join it. Nothing collects to the driver except
-the broadcast node-count scalar.
+bounded). Degree is folded into the edge list once so iterations
+never re-join it. Nothing collects to the driver except bounded
+scalars (node counts, the per-round change count), and the node
+count picks every join tier through :func:`_tier`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -42,6 +55,26 @@ _DEC = "decimal(28,14)"
 # Below this node count the per-iteration rank table broadcasts;
 # above it the joins run co-partitioned on the src-hashed edges.
 _BCAST_NODES = 5_000_000
+# The co-purchase edge CTEs every DuckDB graph oracle starts from:
+# distinct (order, part) lines, then the canonical undirected pairs.
+_LP_CTE = "lp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)"
+_UND_CTES = _LP_CTE + """,
+und AS (
+  SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
+  FROM lp a JOIN lp b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+)"""
+
+
+def _tier(df: DataFrame, n: int) -> DataFrame:
+    """The join tier of a node-sized side, picked from one bounded
+    driver scalar: up to ``_BCAST_NODES`` rows it BROADCASTS into the
+    partitioned edge list; past that the join falls back to the
+    co-partitioned path the src-hashed edges already support.
+    Checkpointed frames report no size stats, so AQE cannot make this
+    call — and under a small-driver vanilla session the planner has
+    been observed picking the EDGE side as the broadcast candidate at
+    sf0.1 (OOM) — so it is made from ``n`` explicitly."""
+    return F.broadcast(df) if n <= _BCAST_NODES else df
 
 
 def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -125,6 +158,57 @@ def _copurchase_edges_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("src_deg", F.count("*").over(Window.partitionBy("src")))
 
 
+def _rank_walk(
+    edges: DataFrame,
+    ranks: DataFrame,
+    n: int,
+    share: Column,
+    damping: float,
+    iters: int,
+    seed_tele: DataFrame | None = None,
+) -> DataFrame:
+    """The contribute/collect loop every PageRank runs: ``iters``
+    fixed rounds from the start ``ranks`` (node, rank) over ``n``
+    nodes. Each round joins ranks onto the edge src, sends ``share``
+    (a Column over the edge and ``rank``: ``rank / src_deg``, or
+    ``rank * w / ws`` weighted) to dst, sums it per dst in exact
+    DECIMAL and casts back to double, then teleports: uniform
+    ``(1-d)/n + d*m``, or ``(1-d)*coalesce(tele, 0) + d*m`` against
+    the broadcast ``seed_tele`` (tnode, tele) table. These forms keep
+    the mirrored oracles hash-exact; do not reorder them.
+
+    In a SYMMETRIZED graph every node has at least one incoming edge
+    (its own symmetric partner), so the dst aggregation already covers
+    every node — the rank rebuild is a projection of the sums, not a
+    left join back onto the node table (r11: that join was one
+    Exchange + one nodes scan per round for rows whose COALESCE(m, 0)
+    branch can never fire). Rank lineage truncates once per round —
+    the standard persist-per-iteration shape (on a cluster:
+    persist(MEMORY_AND_DISK) + unpersist of t-1). No early stop: the
+    round count is what the unrolled oracle replays."""
+    d = F.lit(damping)
+    for _ in range(iters):
+        sums = (
+            edges.join(_tier(ranks, n), edges.src == ranks.node)
+            .select(F.col("dst"), share.cast(_DEC).alias("c"))
+            .groupBy("dst")
+            .agg(F.sum("c").cast("double").alias("m"))
+        )
+        if seed_tele is None:
+            rank = (F.lit(1.0) - d) / F.lit(n) + d * F.col("m")
+        else:
+            sums = sums.join(
+                F.broadcast(seed_tele), F.col("dst") == F.col("tnode"), "left"
+            )
+            rank = (F.lit(1.0) - d) * F.coalesce(
+                F.col("tele"), F.lit(0.0)
+            ) + d * F.col("m")
+        ranks = sums.select(F.col("dst").alias("node"), rank.alias("rank")).transform(
+            pin
+        )
+    return ranks
+
+
 def pagerank(
     edges: DataFrame, damping: float, iters: int, nodes: DataFrame | None = None
 ) -> DataFrame:
@@ -133,57 +217,107 @@ def pagerank(
 
     Every node in a symmetrized graph has in- and out-edges, so there
     is no dangling mass to redistribute; rank_{t+1}(v) =
-    (1-d)/N + d * sum_{u->v} rank_t(u)/deg(u). The inner sum
-    accumulates in DECIMAL(28,14) (exact, order-independent) and only
-    then casts back to double, which is what lets the unrolled DuckDB
-    oracle match with zero tolerance."""
-    # nodes is read by every iteration (contribution join AND rank
-    # rebuild); callers with a keyed node table pass it in
-    # (copurchase_nodes — r11), otherwise materialize it once instead
-    # of replaying the distinct five times. Rank lineage still
-    # truncates per iteration — the standard persist-per-iteration
-    # shape for iterative algorithms (on a cluster:
-    # persist(MEMORY_AND_DISK) + unpersist of t-1).
+    (1-d)/N + d * sum_{u->v} rank_t(u)/deg(u), run by
+    :func:`_rank_walk`. The inner sum accumulates in DECIMAL(28,14)
+    (exact, order-independent) and only then casts back to double,
+    which is what lets the unrolled DuckDB oracle match with zero
+    tolerance."""
+    # nodes is read for the count and the final (rank, deg) join;
+    # callers with a keyed node table pass it in (copurchase_nodes —
+    # r11), otherwise materialize it once instead of replaying the
+    # distinct.
     if nodes is None:
         nodes = (
             edges.select(F.col("src").alias("node"), F.col("src_deg").alias("deg"))
             .distinct()
             .transform(pin)
         )
-    # one bounded driver scalar (the node count) picks the join tier:
-    # the rank table is one row per node, so up to millions of nodes
-    # it BROADCASTS into the partitioned edge list (one shuffle per
-    # iteration: the dst aggregation); past that the join falls back
-    # to the co-partitioned path the src-hashed edge checkpoint
-    # already supports. Checkpointed frames report no size stats, so
-    # AQE cannot make this call — we make it from n explicitly.
     n = nodes.count()
-    ranks = nodes.select("node", (F.lit(1.0) / F.lit(n)).alias("rank"))
-    for _ in range(iters):
-        r_side = F.broadcast(ranks) if n <= _BCAST_NODES else ranks
-        # In a SYMMETRIZED graph every node has at least one incoming
-        # edge (its own symmetric partner), so the dst aggregation
-        # already covers every node — the rank rebuild is a projection
-        # of contrib itself, not a left join back onto nodes (r11:
-        # that join was one Exchange + one nodes scan per iteration
-        # for rows whose COALESCE(m, 0) branch can never fire).
-        ranks = (
-            edges.join(r_side, edges.src == ranks.node)
-            .select(
-                F.col("dst"),
-                (F.col("rank") / F.col("src_deg")).cast(_DEC).alias("c"),
+    ranks = _rank_walk(
+        edges,
+        nodes.select("node", (F.lit(1.0) / F.lit(n)).alias("rank")),
+        n,
+        F.col("rank") / F.col("src_deg"),
+        damping,
+        iters,
+    )
+    return ranks.join(nodes, "node").select("node", "rank", "deg")
+
+
+# Delta-iteration switch: once fewer than this fraction of nodes
+# changed last round, recompute only the affected neighborhood (two
+# cheap semi-joins) instead of the full |E| aggregation. Above it the
+# frontier covers most of the graph and the full path is cheaper.
+_DELTA_FRAC = 0.3
+
+
+def _delta_fixpoint(
+    edges: DataFrame,
+    cur: DataFrame,
+    step: Callable[[DataFrame, DataFrame], DataFrame],
+    merge: Column,
+    rounds: int,
+) -> DataFrame:
+    """The synchronous frontier loop shared by k-core, LPA and BFS:
+    at most ``rounds`` rounds of "aggregate the neighbours, merge into
+    the own value", stopping early at the first round that changes
+    nothing. Returns the final state with ``cur``'s columns.
+
+    ``cur`` is the initial (node, value) state (the loop counts it
+    once: the bounded node count picks every join tier).
+    ``step(active_edges, state_side)`` joins the state onto the edge
+    dsts and returns one row per src: (src, aggregate). ``merge`` is
+    the new value as a Column over the state's value and that
+    aggregate, which is NULL for nodes outside the active set. Each
+    round pins once; its change count rides that checkpoint action
+    through ``observe()`` instead of costing a separate count job.
+    Changes compare null-safely, so a value leaving NULL counts.
+
+    DELTA ITERATION (r6): a node's aggregate can differ from last
+    round's ONLY if some neighbour's value changed last round — so
+    once the changed set is small (< ``_DELTA_FRAC`` of nodes), the
+    step runs over the edges incident to changed nodes only:
+    candidates = srcs with a changed dst, aggregated against the full
+    current state; everyone else keeps its value (merging an
+    unchanged aggregate again is a no-op). Round 1 counts every node
+    as changed, so by induction the per-round states are identical to
+    full recompute and the unrolled oracles still match hash-exact;
+    equality is additionally pinned by test. This pulls a long
+    convergence tail from rounds x |E| toward rounds x |E_active|.
+    A round with no change is a fixpoint — every later synchronous
+    round would be a no-op — so the early stop never changes the
+    result."""
+    node, val = cur.columns
+    n = cur.count()
+    n_changed = n  # round 1: every node is "changed"
+    changed = cur.select(node)
+    for _ in range(rounds):
+        if n_changed == 0:
+            break
+        if n_changed > _DELTA_FRAC * n:
+            act = edges  # full recompute: delta joins not worth it
+        else:
+            cand = (
+                edges.join(
+                    _tier(changed, n_changed), edges.dst == changed[node], "left_semi"
+                )
+                .select("src")
+                .distinct()
             )
-            .groupBy("dst")
-            .agg(
-                (
-                    (F.lit(1.0) - F.lit(damping)) / F.lit(n)
-                    + F.lit(damping) * F.sum("c").cast("double")
-                ).alias("rank")
-            )
-            .select(F.col("dst").alias("node"), "rank")
+            act = edges.join(_tier(cand, n), edges.src == cand.src, "left_semi")
+        upd = step(act, _tier(cur, n))
+        obs = Observation()
+        moved = ~F.col("_new").eqNullSafe(F.col("_old"))
+        stepped = (
+            cur.join(upd, cur[node] == upd.src, "left")
+            .select(node, merge.alias("_new"), F.col(val).alias("_old"))
+            .observe(obs, F.sum(moved.cast("long")).alias("changed"))
             .transform(pin)
         )
-    return ranks.join(nodes, "node").select("node", "rank", "deg")
+        n_changed = int(obs.get["changed"] or 0)
+        changed = stepped.where(moved).select(node)
+        cur = stepped.select(node, F.col("_new").alias(val))
+    return cur
 
 
 def _pagerank_oracle(damping: float = _DAMP, iters: int = _ITERS, top: int = _TOP) -> str:
@@ -194,11 +328,7 @@ def _pagerank_oracle(damping: float = _DAMP, iters: int = _ITERS, top: int = _TO
     d = f"CAST({damping} AS DOUBLE)"
     one = "CAST(1 AS DOUBLE)"
     ctes = [
-        "lp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)",
-        """und AS (
-  SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-  FROM lp a JOIN lp b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-)""",
+        _UND_CTES,
         "edges AS (SELECT pa AS src, pb AS dst FROM und UNION ALL SELECT pb, pa FROM und)",
         "deg AS (SELECT src AS node, COUNT(*) AS deg FROM edges GROUP BY src)",
         "nn AS (SELECT COUNT(*) AS n FROM deg)",
@@ -295,49 +425,29 @@ def personalized_pagerank(
     ns = seeded.agg(F.sum("is_seed")).collect()[0][0]
     n = seeded.count()
     teleport = F.col("is_seed").cast("double") / F.lit(ns)
-    ranks = seeded.select("node", teleport.alias("rank"))
-    base = seeded.select("node", "deg", "is_seed", teleport.alias("tele"))
-    # teleport mass is nonzero ONLY at the seeds, and in a symmetrized
-    # graph every node receives a contribution — so the per-iteration
-    # rebuild joins contrib with the (seed-sized, broadcastable)
-    # teleport table instead of the full node set (r11; see
-    # pagerank() for the unweighted analog).
-    seed_tele = base.where(F.col("is_seed") == 1).select(
-        F.col("node").alias("tnode"), "tele"
+    # teleport mass is nonzero ONLY at the seeds, so each round joins
+    # the sums with the (seed-sized, broadcastable) teleport table
+    # instead of the full node set (r11).
+    seed_tele = seeded.where(F.col("is_seed") == 1).select(
+        F.col("node").alias("tnode"), teleport.alias("tele")
     )
-    for _ in range(iters):
-        r_side = F.broadcast(ranks) if n <= _BCAST_NODES else ranks
-        ranks = (
-            edges.join(r_side, edges.src == ranks.node)
-            .select(
-                F.col("dst"),
-                (F.col("rank") / F.col("src_deg")).cast(_DEC).alias("c"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("c").cast("double").alias("m"))
-            .join(F.broadcast(seed_tele), F.col("dst") == F.col("tnode"), "left")
-            .select(
-                F.col("dst").alias("node"),
-                (
-                    (F.lit(1.0) - F.lit(damping))
-                    * F.coalesce(F.col("tele"), F.lit(0.0))
-                    + F.lit(damping) * F.col("m")
-                ).alias("rank"),
-            )
-            .transform(pin)
-        )
-    return ranks.join(base.select("node", "deg", "is_seed"), "node")
+    ranks = _rank_walk(
+        edges,
+        seeded.select("node", teleport.alias("rank")),
+        n,
+        F.col("rank") / F.col("src_deg"),
+        damping,
+        iters,
+        seed_tele,
+    )
+    return ranks.join(seeded, "node")
 
 
 def _ppr_oracle(damping: float = _DAMP, iters: int = _ITERS, top: int = _PPR_TOP) -> str:
     d = f"CAST({damping} AS DOUBLE)"
     one = "CAST(1 AS DOUBLE)"
     ctes = [
-        "lp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)",
-        """und AS (
-  SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-  FROM lp a JOIN lp b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-)""",
+        _UND_CTES,
         "edges AS (SELECT pa AS src, pb AS dst FROM und UNION ALL SELECT pb, pa FROM und)",
         "deg AS (SELECT src AS node, COUNT(*) AS deg FROM edges GROUP BY src)",
         f"""sd AS (
@@ -418,11 +528,7 @@ def brand_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TRI_TOP = 20
 
 _TRI_ORACLE = f"""
-WITH lp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-und AS (
-  SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-  FROM lp a JOIN lp b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
+WITH {_UND_CTES},
 deg AS (
   SELECT node, COUNT(*) AS deg FROM (
     SELECT pa AS node FROM und UNION ALL SELECT pb FROM und
@@ -545,11 +651,7 @@ def _bfs_oracle(hops: int = _BFS_HOPS, top: int = _BFS_TOP) -> str:
     integer propagation — no float anywhere, so the mirror is exact
     by construction."""
     ctes = [
-        "lp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)",
-        """und AS (
-  SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-  FROM lp a JOIN lp b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-)""",
+        _UND_CTES,
         "edges AS (SELECT pa AS src, pb AS dst FROM und UNION ALL SELECT pb, pa FROM und)",
         "deg AS (SELECT src AS node, COUNT(*) AS deg FROM edges GROUP BY src)",
         f"""d0 AS (
@@ -597,54 +699,70 @@ LIMIT {top}
 _BFS_ORACLE = _bfs_oracle()
 
 
+def bfs_distances(
+    edges: DataFrame,
+    seeds: DataFrame,
+    hops: int,
+    nodes: DataFrame | None = None,
+) -> DataFrame:
+    """BFS hop distance from the ``seeds`` (node) frame over a
+    symmetrized edge list: (node, dist), dist NULL for nodes not
+    reached within ``hops``. Runs on :func:`_delta_fixpoint`: a node's
+    update is "min over its reached neighbours + 1", MIN-merged into
+    its own distance. In a symmetrized list, grouping by src over the
+    dst neighbours sees the same neighbour sets as grouping by dst
+    over srcs. Round r changes exactly the nodes first reached at
+    distance r, so later rounds recompute only the frontier's
+    neighbourhood, and the loop stops as soon as a round reaches no
+    new node — before the hop budget once the seeds' components are
+    exhausted. Pure integers: no float discipline needed."""
+    if nodes is None:
+        nodes = edges.select(F.col("src").alias("node")).distinct()
+    unreached = hops + 1
+    dist = nodes.join(
+        seeds.select(F.col("node").alias("snode"), F.lit(0).alias("seed_dist")),
+        nodes.node == F.col("snode"),
+        "left",
+    ).select("node", F.col("seed_dist").alias("dist"))
+
+    def step(act: DataFrame, side: DataFrame) -> DataFrame:
+        return (
+            act.join(side.where(F.col("dist").isNotNull()), act.dst == side.node)
+            .groupBy(act.src)
+            .agg(F.min("dist").alias("reach"))
+        )
+
+    merged = F.least(
+        F.coalesce(F.col("dist"), F.lit(unreached)),
+        F.coalesce(F.col("reach") + 1, F.lit(unreached)),
+    )
+    return _delta_fixpoint(
+        edges,
+        dist,
+        step,
+        F.when(merged == unreached, F.lit(None).cast("int")).otherwise(merged),
+        hops,
+    )
+
+
 @register("copurchase_distance", oracle=_BFS_ORACLE)
 def copurchase_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BFS hop distance from one brand's parts over the co-purchase
     graph — "how many co-purchase hops does it take to reach this
     part from the brand's ecosystem", the reachability/market-adjacency
-    question behind assortment planning. Frontier expansion is the
-    textbook iterative min-join (hop h's reachable set joins the edge
-    list, MIN-merges into the distance table); distances are pure
-    integers, so Spark and the unrolled-CTE oracle agree exactly with
-    no float discipline needed. Same materialize-per-iteration shape
-    as :func:`pagerank`; each hop is one edges-sized join plus a
-    node-sized MIN-merge. Nearest ``_BFS_TOP`` non-seed parts by
-    (distance, part key)."""
+    question behind assortment planning. :func:`bfs_distances` expands
+    the frontier (each hop one join of the reached set onto the edge
+    list plus a node-sized MIN-merge, stopping early once no new part
+    is reached); distances are pure integers, so Spark and the
+    unrolled-CTE oracle agree exactly. Nearest ``_BFS_TOP`` non-seed
+    parts by (distance, part key)."""
     edges = copurchase_edges(spark, sf_dir)
     part = load_tables(spark, sf_dir, ("part",))["part"]
     nodes = copurchase_nodes(spark, sf_dir)
     seeds = part.where(F.col("p_brand") == _BFS_SEED_BRAND).select(
-        F.col("p_partkey").alias("snode"), F.lit(0).alias("seed_dist")
+        F.col("p_partkey").alias("node")
     )
-    unreached = _BFS_HOPS + 1
-    dist = nodes.join(seeds, nodes.node == F.col("snode"), "left").select(
-        "node", F.col("seed_dist").alias("dist")
-    )
-    n = nodes.count()
-    for _ in range(_BFS_HOPS):
-        d_side = dist if n > _BCAST_NODES else F.broadcast(dist)
-        reach = (
-            edges.join(
-                d_side.where(F.col("dist").isNotNull()),
-                edges.src == F.col("node"),
-            )
-            .groupBy("dst")
-            .agg(F.min("dist").alias("reach"))
-        )
-        merged = F.least(
-            F.coalesce(F.col("dist"), F.lit(unreached)),
-            F.coalesce(F.col("reach") + 1, F.lit(unreached)),
-        )
-        dist = (
-            dist.join(reach, dist.node == reach.dst, "left")
-            .select(
-                "node",
-                F.when(merged == unreached, F.lit(None).cast("int"))
-                .otherwise(merged)
-                .alias("dist"),
-            )
-            .transform(pin)
-        )
+    dist = bfs_distances(edges, seeds, _BFS_HOPS, nodes=nodes)
     return (
         dist.join(nodes, "node")
         .where(F.col("dist").isNotNull() & (F.col("dist") > 0))
@@ -785,7 +903,7 @@ def _wpr_oracle(damping: float = _DAMP, iters: int = _ITERS, top: int = _TOP) ->
     d = f"CAST({damping} AS DOUBLE)"
     one = "CAST(1 AS DOUBLE)"
     ctes = [
-        "lp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)",
+        _LP_CTE,
         """wund AS (
   SELECT a.l_partkey AS pa, b.l_partkey AS pb, COUNT(*) AS w
   FROM lp a JOIN lp b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
@@ -835,10 +953,11 @@ def copurchase_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     many orders contained the pair), and each node distributes rank
     proportionally to edge weight (rank * w / strength) — repeat
     co-purchases count for more than one-off baskets, the usual
-    refinement once the unweighted walk (B93) is in place. Same
-    decimal-sum determinism, materialization, and broadcast-tier
-    shape; weights and strengths are integers, so only the mirrored
-    rank arithmetic is float."""
+    refinement once the unweighted walk (B93) is in place. Builds its
+    own weighted edge list and strengths, then runs the same
+    :func:`_rank_walk` with share ``rank * w / ws``; weights and
+    strengths are integers, so only the mirrored rank arithmetic is
+    float."""
     li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
     lp = li.select("l_orderkey", "l_partkey").distinct()
     sets = lp.groupBy("l_orderkey").agg(
@@ -864,27 +983,14 @@ def copurchase_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("src").alias("node"), F.col("ws").alias("strength")
     ).distinct().transform(pin)
     n = nodes.count()
-    ranks = nodes.select("node", (F.lit(1.0) / F.lit(n)).alias("rank"))
-    for _ in range(_ITERS):
-        r_side = F.broadcast(ranks) if n <= _BCAST_NODES else ranks
-        # symmetrized edges -> every node receives a contribution, so
-        # the rebuild projects contrib directly (see pagerank()).
-        ranks = (
-            edges.join(r_side, edges.src == ranks.node)
-            .select(
-                F.col("dst"),
-                (F.col("rank") * F.col("w") / F.col("ws")).cast(_DEC).alias("c"),
-            )
-            .groupBy("dst")
-            .agg(
-                (
-                    (F.lit(1.0) - F.lit(_DAMP)) / F.lit(n)
-                    + F.lit(_DAMP) * F.sum("c").cast("double")
-                ).alias("rank")
-            )
-            .select(F.col("dst").alias("node"), "rank")
-            .transform(pin)
-        )
+    ranks = _rank_walk(
+        edges,
+        nodes.select("node", (F.lit(1.0) / F.lit(n)).alias("rank")),
+        n,
+        F.col("rank") * F.col("w") / F.col("ws"),
+        _DAMP,
+        _ITERS,
+    )
     return (
         ranks.join(nodes, "node")
         .select(
@@ -900,11 +1006,10 @@ def copurchase_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------- B109
 _CORE_ROUNDS = 24  # >= observed convergence (19 at sf0.01) + margin;
 #                    extra rounds are no-ops (the iteration is monotone)
-# Delta-iteration switch: once fewer than this fraction of nodes
-# changed last round, recompute only the affected neighborhood (two
-# cheap semi-joins) instead of the full |E| aggregation. Above it the
-# frontier covers most of the graph and the full path is cheaper.
-_DELTA_FRAC = 0.3
+_HINDEX = (
+    "aggregate(sequence(1, size(cs)), CAST(0 AS BIGINT),"
+    " (a, j) -> greatest(a, least(element_at(cs, j), CAST(j AS BIGINT))))"
+)
 
 
 def coreness_frame(
@@ -919,99 +1024,39 @@ def coreness_frame(
     exact coreness. The sequential min-heap peel (Batagelj-Zaversnik)
     is inherently serial; the H-index form is one join + one
     map-side-combinable aggregation per round, the shape that
-    distributes.
+    distributes. Returns (node, c).
 
-    Each round: neighbor estimates shuffle on dst, collect per node
-    (bounded by max degree — for web-scale hub degrees the in-row
-    list becomes a count-bucket H-index, same contract), H-index
-    computed IN-ROW over the sorted list, state lineage truncated per
-    round like :func:`pagerank`. Early-stops via observe() when no
-    value changed, so converged graphs never pay the full round
-    budget; ``max_rounds`` keeps the unrolled oracle replayable.
-
-    DELTA ITERATION (r6): after any round, a node's H can differ next
-    round ONLY if some neighbor's estimate changed this round — so
-    once the changed set is small (< ``_DELTA_FRAC`` of nodes), the
-    recompute runs over the edges incident to changed nodes only:
-    candidates = srcs with a changed dst, H recomputed just for them
-    against the full current state, everyone else keeps c. The
-    per-round states are identical to full recompute by induction
-    (round 1 starts with every node changed), so the unrolled oracle
-    still matches hash-exact; equality is additionally pinned by
-    test. This pulls the long convergence tail (19+ rounds at sf0.01,
-    a ~12x sf1 soak ratio) from rounds x |E| toward
-    rounds x |E_active| — the dominant term at scale."""
+    This is the init, step and merge of :func:`_delta_fixpoint`, which
+    supplies the per-round pin, the early stop once no estimate
+    changes (converged graphs never pay the full ``max_rounds``
+    budget, which keeps the unrolled oracle replayable) and the delta
+    path over the changed nodes' neighbourhood once the frontier is
+    small (r6: the 19+ round convergence tail at sf0.01, a ~12x sf1
+    soak ratio, is where it pays). Step: neighbor estimates shuffle
+    on the src, collect per node (bounded by max degree — for
+    web-scale hub degrees the in-row list becomes a count-bucket
+    H-index, same contract), and the H-index is computed IN-ROW over
+    the sorted list. Merge: min(c, H), or c for nodes outside the
+    active set."""
     cur = (
         edges.select(F.col("src").alias("node"), F.col("src_deg").alias("c"))
         .distinct()
         .transform(pin)
     )
-    n = cur.count()  # bounded driver scalar picks the join tier
-    n_changed = n  # round 1: every node is "changed"
-    changed = cur.select("node")
-    hidx = (
-        "aggregate(sequence(1, size(cs)), CAST(0 AS BIGINT),"
-        " (a, j) -> greatest(a, least(element_at(cs, j), CAST(j AS BIGINT))))"
-    )
-    for _ in range(max_rounds):
-        if n_changed == 0:
-            break
-        # the state table is node-sized: broadcast it EXPLICITLY —
-        # checkpointed frames carry no stats, and under a small-driver
-        # vanilla session the planner has been observed picking the
-        # EDGE side as the broadcast candidate at sf0.1 (OOM)
-        c_side = F.broadcast(cur) if n <= _BCAST_NODES else cur
-        if n_changed > _DELTA_FRAC * n:
-            act_edges = edges  # full recompute: delta joins not worth it
-        else:
-            ch_side = (
-                F.broadcast(changed) if n_changed <= _BCAST_NODES else changed
-            )
-            cand = (
-                edges.join(ch_side, edges.dst == changed.node, "left_semi")
-                .select("src")
-                .distinct()
-            )
-            cand_side = F.broadcast(cand) if n <= _BCAST_NODES else cand
-            act_edges = edges.join(
-                cand_side, edges.src == cand.src, "left_semi"
-            )
-        nb = (
-            act_edges.join(c_side, act_edges.dst == cur.node)
-            .groupBy(act_edges.src)
-            .agg(F.sort_array(F.collect_list("c"), asc=False).alias("cs"))
-            .select(F.col("src").alias("hn"), F.expr(hidx).alias("h"))
-        )
-        from pyspark.sql import Observation
 
-        obs = Observation()
-        # left join: nodes outside the candidate set keep c (their H
-        # cannot have changed); new_c != c marks next round's frontier.
-        # The change count rides the checkpoint action via observe()
-        # instead of costing a separate per-round count job.
-        stepped = (
-            cur.join(nb, cur.node == F.col("hn"), "left")
-            .select(
-                "node",
-                F.when(
-                    F.col("h").isNotNull(), F.least(F.col("c"), F.col("h"))
-                )
-                .otherwise(F.col("c"))
-                .alias("new_c"),
-                F.col("c").alias("_old"),
-            )
-            .observe(
-                obs,
-                F.sum((F.col("new_c") != F.col("_old")).cast("long")).alias(
-                    "changed"
-                ),
-            )
-            .transform(pin)
+    def step(act: DataFrame, side: DataFrame) -> DataFrame:
+        return (
+            act.join(side, act.dst == side.node)
+            .groupBy(act.src)
+            .agg(F.sort_array(F.collect_list("c"), asc=False).alias("cs"))
+            .select("src", F.expr(_HINDEX).alias("h"))
         )
-        n_changed = int(obs.get["changed"] or 0)
-        changed = stepped.where(F.col("new_c") != F.col("_old")).select("node")
-        cur = stepped.select("node", F.col("new_c").alias("c"))
-    return cur
+
+    merge = (
+        F.when(F.col("h").isNotNull(), F.least(F.col("c"), F.col("h")))
+        .otherwise(F.col("c"))
+    )
+    return _delta_fixpoint(edges, cur, step, merge, max_rounds)
 
 
 def _coreness_oracle(rounds: int = _CORE_ROUNDS) -> str:
@@ -1021,11 +1066,7 @@ def _coreness_oracle(rounds: int = _CORE_ROUNDS) -> str:
     iteration is idempotent at the fixpoint, so the unrolled depth
     does not need to match Spark's early-stop round count."""
     ctes = [
-        "lp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)",
-        """und AS (
-  SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-  FROM lp a JOIN lp b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-)""",
+        _UND_CTES,
         "edges AS MATERIALIZED (SELECT pa AS src, pb AS dst FROM und UNION ALL SELECT pb, pa FROM und)",
         "r0 AS MATERIALIZED (SELECT src AS node, COUNT(*) AS c FROM edges GROUP BY src)",
     ]
@@ -1101,89 +1142,44 @@ def lpa_labels(edges: DataFrame, rounds: int = _LPA_ROUNDS) -> DataFrame:
     synchronous updates plus a total tie order make the run a pure
     function of the graph (classic LPA's random update order is
     irreproducible, useless for an oracle-checked engine). A fixed
-    round count bounds work and keeps the unrolled mirror replayable;
+    round budget bounds work and keeps the unrolled mirror replayable;
     communities denser than their surroundings stabilize in a few
     rounds (two bridged cliques label themselves by round 2, tested).
-    Per round: one join (labels onto edge dsts), one (src, label)
-    count aggregation, one per-src max_by argmax — all map-side
-    combinable, lineage truncated per round.
+    Returns (node, lbl).
 
-    DELTA ITERATION (r6, same argument as :func:`coreness_frame`): a
-    node's vote histogram differs from last round's ONLY if some
-    neighbor's label changed, so once the changed set drops under
-    ``_DELTA_FRAC`` of nodes the votes recompute only for srcs with a
-    changed dst; everyone else keeps their label. Synchronous updates
-    make the per-round states identical to full recompute, so the
-    unrolled oracle still matches hash-exact."""
+    This is the init, step and merge of :func:`_delta_fixpoint`, with
+    the same delta argument as :func:`coreness_frame`: a node's vote
+    histogram differs from last round's ONLY if some neighbor's label
+    changed, so with a small changed set the votes recompute only for
+    srcs with a changed dst, and a round that changes no label ends
+    the loop. Step: one join (labels onto edge dsts), one (src, label)
+    count aggregation, one per-src max_by argmax — all map-side
+    combinable. Merge: the winning label, or the old one for nodes
+    outside the active set."""
     cur = (
         edges.select(F.col("src").alias("node"), F.col("src").alias("lbl"))
         .distinct()
         .transform(pin)
     )
-    n = cur.count()  # bounded driver scalar picks the join tier
-    n_changed = n  # round 1: every node is "changed"
-    changed = cur.select("node")
-    for _ in range(rounds):
-        if n_changed == 0:
-            break  # fixpoint: further synchronous rounds are no-ops
-        # same explicit broadcast reasoning as coreness_frame
-        c_side = F.broadcast(cur) if n <= _BCAST_NODES else cur
-        if n_changed > _DELTA_FRAC * n:
-            act_edges = edges
-        else:
-            ch_side = (
-                F.broadcast(changed) if n_changed <= _BCAST_NODES else changed
-            )
-            cand = (
-                edges.join(ch_side, edges.dst == changed.node, "left_semi")
-                .select("src")
-                .distinct()
-            )
-            cand_side = F.broadcast(cand) if n <= _BCAST_NODES else cand
-            act_edges = edges.join(
-                cand_side, edges.src == cand.src, "left_semi"
-            )
+
+    def step(act: DataFrame, side: DataFrame) -> DataFrame:
         votes = (
-            act_edges.join(c_side, act_edges.dst == cur.node)
-            .groupBy(act_edges.src, "lbl")
+            act.join(side, act.dst == side.node)
+            .groupBy(act.src, "lbl")
             .agg(F.count("*").alias("cnt"))
         )
-        new_lbls = (
-            votes.groupBy("src")
-            .agg(F.expr("max_by(lbl, struct(cnt, -lbl))").alias("new_lbl"))
-            .select(F.col("src").alias("vn"), "new_lbl")
+        return votes.groupBy("src").agg(
+            F.expr("max_by(lbl, struct(cnt, -lbl))").alias("new_lbl")
         )
-        from pyspark.sql import Observation
 
-        obs = Observation()
-        stepped = (
-            cur.join(new_lbls, cur.node == F.col("vn"), "left")
-            .select(
-                "node",
-                F.coalesce("new_lbl", "lbl").alias("new_lbl"),
-                F.col("lbl").alias("_old"),
-            )
-            .observe(
-                obs,
-                F.sum(
-                    (F.col("new_lbl") != F.col("_old")).cast("long")
-                ).alias("changed"),
-            )
-            .transform(pin)
-        )
-        n_changed = int(obs.get["changed"] or 0)
-        changed = stepped.where(F.col("new_lbl") != F.col("_old")).select("node")
-        cur = stepped.select("node", F.col("new_lbl").alias("lbl"))
-    return cur
+    return _delta_fixpoint(
+        edges, cur, step, F.coalesce("new_lbl", "lbl"), rounds
+    )
 
 
 def _lpa_oracle(rounds: int = _LPA_ROUNDS) -> str:
     ctes = [
-        "lp AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)",
-        """und AS (
-  SELECT DISTINCT a.l_partkey AS pa, b.l_partkey AS pb
-  FROM lp a JOIN lp b ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-)""",
+        _UND_CTES,
         "edges AS MATERIALIZED (SELECT pa AS src, pb AS dst FROM und UNION ALL SELECT pb, pa FROM und)",
         "l0 AS MATERIALIZED (SELECT DISTINCT src AS node, src AS lbl FROM edges)",
     ]

@@ -10,6 +10,8 @@ rankings agree with the oracle with no float tolerance games.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -282,6 +284,26 @@ def _bucket_sql(vec: str, table: int, dim: int = _ORACLE_DIM) -> str:
     return "(" + " + ".join(bits) + ")"
 
 
+def _hyperplane_buckets(
+    e: DataFrame, dim: int, carry: list[str], planes: int = _N_PLANES
+) -> DataFrame:
+    """(*carry, tbl, bucket): every row of ``e`` bucketed in each of
+    the ``_N_TABLES`` hyperplane tables (:func:`_bucket_expr` with
+    ``planes`` sign bits), one union arm per table — the Spark twin
+    of :func:`_lsh_bucket_cte`."""
+    return functools.reduce(
+        DataFrame.unionAll,
+        [
+            e.select(
+                *carry,
+                F.lit(t).alias("tbl"),
+                _bucket_expr("embedding", t, dim, planes).alias("bucket"),
+            )
+            for t in range(_N_TABLES)
+        ],
+    )
+
+
 def _lsh_bucket_cte() -> str:
     """CTE ``b(vec_id, tbl, bucket)``: every vector bucketed in every
     table. MATERIALIZED — the probe and corpus sides both scan it, and
@@ -328,27 +350,23 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket tables. Queries only compare against corpus vectors landing
     in the same bucket of any table — candidate count is a small
     fraction of the corpus, which is the whole point at 100 TB.
-    Exactness is traded for recall; tests/test_similarity.py measures
-    recall@k against the brute-force baseline."""
+    Exactness is traded for recall;
+    tests/test_dedup_similarity.py::test_ann_lsh_recall_vs_bruteforce
+    measures recall@k against the brute-force baseline."""
     e = _emb(spark, sf_dir)
-    dim = _emb_dim(e)
-    tables = []
-    for t in range(_N_TABLES):
-        tables.append(
-            e.select(
-                "vec_id", "embedding", F.lit(t).alias("tbl"), _bucket_expr("embedding", t, dim).alias("bucket")
-            )
-        )
-    bucketed = tables[0]
-    for t in tables[1:]:
-        bucketed = bucketed.unionAll(t)
+    b = _hyperplane_buckets(e, _emb_dim(e), ["vec_id"])
+    q = b.where(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), "tbl", "bucket"
+    )
+    return _lsh_topk(e, b, q)
 
-    q = bucketed.where(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("eq"), "tbl", "bucket"
-    )
-    c = bucketed.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ec"), "tbl", "bucket"
-    )
+
+def _lsh_topk(e: DataFrame, b: DataFrame, q: DataFrame) -> DataFrame:
+    """The candidate -> score -> rank tail of the LSH ANN queries:
+    the probe table ``q`` (query_id, tbl, bucket) broadcasts into the
+    bucketed corpus ``b``; distinct (query, neighbor) candidates are
+    scored by exact cosine and the top ``_TOP_K`` per query kept."""
+    c = b.select(F.col("vec_id").alias("neighbor_id"), "tbl", "bucket")
     cosine = _dot("eq", "ec") / (F.col("nq") * F.col("nc"))
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
     return (
@@ -358,15 +376,17 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id")
         .distinct()
         .join(
-            _emb(spark, sf_dir).select(
-                F.col("vec_id").alias("query_id"), F.col("embedding").alias("eq"),
+            e.select(
+                F.col("vec_id").alias("query_id"),
+                F.col("embedding").alias("eq"),
                 _norm("embedding").alias("nq"),
             ),
             "query_id",
         )
         .join(
-            _emb(spark, sf_dir).select(
-                F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ec"),
+            e.select(
+                F.col("vec_id").alias("neighbor_id"),
+                F.col("embedding").alias("ec"),
                 _norm("embedding").alias("nc"),
             ),
             "neighbor_id",
@@ -2314,63 +2334,15 @@ def ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     D19 for the persisted-index pattern); only the bounded query side
     explodes its probe list. Exact scoring touches candidates only."""
     e = _emb(spark, sf_dir)
-    dim = _emb_dim(e)
-    tables = []
-    for t in range(_N_TABLES):
-        tables.append(
-            e.select(
-                "vec_id",
-                F.lit(t).alias("tbl"),
-                _bucket_expr("embedding", t, dim).alias("bucket"),
-            )
-        )
-    bucketed = tables[0]
-    for t in tables[1:]:
-        bucketed = bucketed.unionAll(t)
-
+    b = _hyperplane_buckets(e, _emb_dim(e), ["vec_id"])
     probes = F.array(
         F.col("bucket"),
-        *[
-            F.col("bucket").bitwiseXOR(F.lit(1 << p)) for p in range(_N_PLANES)
-        ],
+        *[F.col("bucket").bitwiseXOR(F.lit(1 << p)) for p in range(_N_PLANES)],
     )
-    q = (
-        bucketed.where(F.col("vec_id") < _N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "tbl",
-            F.explode(probes).alias("bucket"),
-        )
+    q = b.where(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), "tbl", F.explode(probes).alias("bucket")
     )
-    c = bucketed.select(F.col("vec_id").alias("neighbor_id"), "tbl", "bucket")
-    cosine = _dot("eq", "ec") / (F.col("nq") * F.col("nc"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        F.broadcast(q)
-        .join(c, ["tbl", "bucket"])
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-        .join(
-            e.select(
-                F.col("vec_id").alias("query_id"),
-                F.col("embedding").alias("eq"),
-                _norm("embedding").alias("nq"),
-            ),
-            "query_id",
-        )
-        .join(
-            e.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("embedding").alias("ec"),
-                _norm("embedding").alias("nc"),
-            ),
-            "neighbor_id",
-        )
-        .select("query_id", "neighbor_id", cosine.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= _TOP_K)
-    )
+    return _lsh_topk(e, b, q)
 
 
 # ---------------------------------------------------------------- C104
@@ -3792,17 +3764,7 @@ def bitext_margin_mining_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             e.groupBy("label").count().agg(F.max("count")).first()[0] or 0
         )
         planes = _bitext_planes(int(n_side))
-        tables = []
-        for t in range(_N_TABLES):
-            tables.append(
-                e.select(
-                    "vec_id", "label", F.lit(t).alias("tbl"),
-                    _bucket_expr("embedding", t, dim, planes).alias("bucket"),
-                )
-            )
-        bk = tables[0]
-        for t in tables[1:]:
-            bk = bk.unionAll(t)
+        bk = _hyperplane_buckets(e, dim, ["vec_id", "label"], planes)
         w_post = Window.partitionBy("tbl", "bucket", "label").orderBy(
             F.md5(F.concat(F.lit("btx|"), F.col("vec_id").cast("string"))),
             "vec_id",

@@ -25,11 +25,10 @@ from pyspark.sql import functions as F  # noqa: E402
 from cdk_serverless_data_lake_sandbox_spark.operators.similarity import (  # noqa: E402
     _BITEXT_MAX_POSTING,
     _N_PLANES,
-    _N_TABLES,
     _bitext_planes,
-    _bucket_expr,
     _emb,
     _emb_dim,
+    _hyperplane_buckets,
     bitext_margin_mining,
     bitext_margin_mining_lsh,
 )
@@ -49,13 +48,7 @@ def main() -> None:
     # count truncating postings with the op's own bucketing
     e = _emb(spark, d)
     dim = _emb_dim(e)
-    bk = None
-    for t in range(_N_TABLES):
-        x = e.select(
-            "vec_id", "label", F.lit(t).alias("tbl"),
-            _bucket_expr("embedding", t, dim, planes).alias("bucket"),
-        )
-        bk = x if bk is None else bk.unionAll(x)
+    bk = _hyperplane_buckets(e, dim, ["vec_id", "label"], planes)
     truncated = (
         bk.groupBy("tbl", "bucket", "label")
         .count()

@@ -190,11 +190,10 @@ def test_bitext_lsh_recall_floor_with_guards_engaged(spark, tmp_path):
     from cdk_serverless_data_lake_sandbox_spark.operators.similarity import (
         _BITEXT_MAX_POSTING,
         _N_PLANES,
-        _N_TABLES,
         _bitext_planes,
-        _bucket_expr,
         _emb,
         _emb_dim,
+        _hyperplane_buckets,
         bitext_margin_mining,
         bitext_margin_mining_lsh,
     )
@@ -207,13 +206,7 @@ def test_bitext_lsh_recall_floor_with_guards_engaged(spark, tmp_path):
 
     e = _emb(spark, d)
     dim = _emb_dim(e)
-    bk = None
-    for t in range(_N_TABLES):
-        x = e.select(
-            "vec_id", "label", F.lit(t).alias("tbl"),
-            _bucket_expr("embedding", t, dim, planes).alias("bucket"),
-        )
-        bk = x if bk is None else bk.unionAll(x)
+    bk = _hyperplane_buckets(e, dim, ["vec_id", "label"], planes)
     truncated = (
         bk.groupBy("tbl", "bucket", "label")
         .count()

@@ -797,14 +797,14 @@ def test_pagerank_matches_pure_python(spark, pairs):
 @settings(max_examples=prop_examples(6), deadline=None)
 @given(pairs=_edge_lists, seed_ix=st.integers(0, 100))
 def test_bfs_matches_pure_python(spark, pairs, seed_ix):
-    """The BFS frontier loop == a pure-Python BFS from the same seed,
-    for every reachable node within the hop budget."""
+    """bfs_distances == a pure-Python BFS from the same seed, for every
+    reachable node within the hop budget."""
     import collections
 
     from cdk_serverless_data_lake_sandbox_spark.operators.graph import (
         _BFS_HOPS,
+        bfs_distances,
     )
-    from pyspark.sql import functions as FF
 
     edges_df, und, deg = _mk_edges(spark, pairs)
     nodes_l = sorted(deg)
@@ -826,41 +826,49 @@ def test_bfs_matches_pure_python(spark, pairs, seed_ix):
                 distp[v] = distp[u] + 1
                 dq.append(v)
 
-    # spark: reuse the iteration body via the registered operator's
-    # internals (same expressions, seeded directly)
-    nodes = edges_df.select(
-        FF.col("src").alias("node"), FF.col("src_deg").alias("deg")
-    ).distinct()
-    unreached = _BFS_HOPS + 1
-    dist = nodes.select(
-        "node",
-        FF.when(FF.col("node") == seed, FF.lit(0)).alias("dist"),
-    )
-    for _ in range(_BFS_HOPS):
-        reach = (
-            edges_df.join(
-                FF.broadcast(dist.where(FF.col("dist").isNotNull())),
-                edges_df.src == FF.col("node"),
-            )
-            .groupBy("dst")
-            .agg(FF.min("dist").alias("reach"))
-        )
-        merged = FF.least(
-            FF.coalesce(FF.col("dist"), FF.lit(unreached)),
-            FF.coalesce(FF.col("reach") + 1, FF.lit(unreached)),
-        )
-        dist = (
-            dist.join(reach, dist.node == reach.dst, "left")
-            .select(
-                "node",
-                FF.when(merged == unreached, FF.lit(None).cast("int"))
-                .otherwise(merged)
-                .alias("dist"),
-            )
-            .localCheckpoint()
-        )
+    seeds = spark.createDataFrame([(seed,)], "node long")
+    dist = bfs_distances(edges_df, seeds, _BFS_HOPS)
     got = {r.node: r.dist for r in dist.collect() if r.dist is not None}
     assert got == distp
+
+
+def test_bfs_stops_once_no_node_is_reached(spark):
+    """BFS ends at the first round that reaches no new node: from the
+    end of a two-hop chain it pins 3 rounds (reach 1, reach 2, no
+    change), not the full _BFS_HOPS budget."""
+    import cdk_serverless_data_lake_sandbox_spark.operators.graph as G
+
+    edges_df, _, _ = _mk_edges(spark, [(1, 2), (2, 3), (8, 9)])
+    seeds = spark.createDataFrame([(1,)], "node long")
+    calls = []
+    orig = G.pin
+
+    def counting_pin(df):
+        calls.append(df.columns)
+        return orig(df)
+
+    G.pin = counting_pin
+    try:
+        got = {r.node: r.dist for r in G.bfs_distances(edges_df, seeds, G._BFS_HOPS).collect()}
+    finally:
+        G.pin = orig
+    assert got == {1: 0, 2: 1, 3: 2, 8: None, 9: None}
+    assert len(calls) == 3 < G._BFS_HOPS
+
+
+def test_graph_iteration_has_one_loop_of_each_kind():
+    """Regrowth guard: graph.py decides the broadcast tier in one
+    place (``_tier``) and counts per-round changes in one place
+    (``_delta_fixpoint``)."""
+    import inspect
+    import re
+
+    import cdk_serverless_data_lake_sandbox_spark.operators.graph as G
+
+    src = inspect.getsource(G)
+    assert src.count("Observation(") == 1
+    tier = re.findall(r"[<>]=?\s*_BCAST_NODES|_BCAST_NODES\s*[<>]=?", src)
+    assert len(tier) == 1, tier
 
 
 # ------------------------------------------------------------ ORC zone
